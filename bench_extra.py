@@ -3,7 +3,10 @@
 measurement, so auxiliary numbers live here).
 
 Usage: python bench_extra.py <probe> [...probe]
-Probes: q6_phases q11_phases q11b_phases gramstats q10_kernel
+Probes: q6_phases q11_phases gramstats q10_kernel
+Per-layer numbers of the incremental step come from the production code's
+own spans: ``python3 perfbench/run.py --workload stream --trace 1`` (the
+``incremental.*`` rows).
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
 Prints one JSON object per probe.
@@ -171,108 +174,6 @@ def q11_phases(spark, sf_dir: str) -> dict:
     return out
 
 
-def q11b_phases(spark, sf_dir: str) -> dict:
-    """Incremental step phase profile (the bench q11b shape), with a job
-    count per phase via the status tracker."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as em
-    from pipeline.blocking import key_table_with_counts, token_df
-    from pipeline.config import PRODUCTION_CONFIG
-    from pipeline.incremental import (
-        _score_increment_pairs,
-        _edges_to_entities,
-        _merge_labels,
-        incremental_candidate_pairs,
-        increment_tuning,
-    )
-    from pipeline.canonicalize import canonicalize
-    from pipeline.features import featurize
-    from pipeline.incremental import _pin
-    from pipeline.linkage import build_plan, cluster_edges
-    from pipeline.session import release_caches
-
-    out: dict = {}
-    doc_turns = em._turns_from_documents(spark, sf_dir)
-    slot = F.expr("cast(substring(conv_id, 2) as int) % 20")
-    base_plan = build_plan(doc_turns.where(slot != 19), PRODUCTION_CONFIG)
-    base_clusters, _ = cluster_edges(base_plan["edges"], base_plan["features"])
-    base_feats = base_plan["features"]
-    base_feats.count()
-    base_clusters = base_clusters.localCheckpoint(eager=True)
-    base_anchor_df = token_df(base_feats, PRODUCTION_CONFIG).localCheckpoint(
-        eager=True
-    )
-    base_keys, base_counts = key_table_with_counts(
-        base_feats, PRODUCTION_CONFIG, base_anchor_df
-    )
-    base_keys = base_keys.localCheckpoint(eager=True)
-    base_counts = base_counts.localCheckpoint(eager=True)
-    release_caches()
-
-    tracker = spark.sparkContext.statusTracker()
-
-    def _jobs():
-        return len(tracker.getJobIdsForGroup(None) or [])
-
-    j0 = len(spark.sparkContext.statusTracker().getActiveJobsIds() or [])
-    new_turns = doc_turns.where(slot == 19)
-    with increment_tuning(spark):
-        jobs_before: dict = {}
-        all_ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-
-        def njobs():
-            ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-            return len(ids) if ids else 0
-
-        n_start = njobs()
-        new_feats = _timed(
-            spark,
-            out,
-            "1_featurize_antijoin_pin",
-            lambda: _pin(
-                featurize(canonicalize(new_turns), PRODUCTION_CONFIG).join(
-                    base_feats.select("conv_id"), "conv_id", "left_anti"
-                )
-            ),
-        )
-        out["jobs_1"] = njobs() - n_start
-        n1 = njobs()
-        new_ids = new_feats.select("conv_id")
-        feats_all = base_feats.unionByName(new_feats)
-        res = _timed(
-            spark,
-            out,
-            "2_candidate_pairs",
-            lambda: incremental_candidate_pairs(
-                feats_all, new_ids, PRODUCTION_CONFIG, True, base_anchor_df,
-                base_keys, base_counts, new_feats,
-            ),
-        )
-        pairs = res[0]
-        scored = _timed(
-            spark,
-            out,
-            "3_score_pairs_pinned",
-            lambda: _score_increment_pairs(
-                feats_all, pairs, PRODUCTION_CONFIG, True
-            ),
-        )
-        out["jobs_23"] = njobs() - n1
-        n2 = njobs()
-
-        def _tail():
-            edges = _edges_to_entities(scored, base_clusters)
-            clusters, _ = _merge_labels(base_clusters, edges, new_ids)
-            _noop(clusters)
-
-        _timed(spark, out, "4_edges_cc_relabel_write", _tail)
-        out["jobs_4"] = njobs() - n2
-        out["jobs_total"] = njobs() - n_start
-    release_caches()
-    return out
-
-
 def q10_kernel(spark, sf_dir: str) -> dict:
     """Pure-Python kernel throughput on ring pairs (no Spark in the timed
     region): isolates kernel CPU from Spark scheduling."""
@@ -322,7 +223,6 @@ def q10_kernel(spark, sf_dir: str) -> dict:
 PROBES = {
     "q6_phases": q6_phases,
     "q11_phases": q11_phases,
-    "q11b_phases": q11b_phases,
     "gramstats": gramstats,
     "q10_kernel": q10_kernel,
 }

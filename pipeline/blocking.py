@@ -571,16 +571,18 @@ def star_pair_flag(
     on caching). Adds ``_rn`` / ``_min_a`` / ``_keep``; callers filter
     on ``_keep`` and may audit via ``star_pair_audit``."""
     w = Window.partitionBy(*key_cols).orderBy(id_a, id_b)
-    # _min_a == the bucket's minimum id_a == the FIRST row's id_a under
-    # this ordering, so a running first() shares ONE Window operator
-    # (same partitioning + ordering) with the row_number instead of a
-    # second unordered full-partition Window pass over the entire pair
-    # table (round-6; decision parity pinned by the existing cap tests
-    # plus an interleaved A/B — plan shows 1 Window node, was 2).
+    # _min_a == the bucket's minimum non-null id_a: under this ordering a
+    # RUNNING min() reaches it at the bucket's first non-null row and
+    # shares ONE Window operator (same partitioning + ordering) with the
+    # row_number instead of a second unordered full-partition Window
+    # pass over the entire pair table (round-6; plan shows 1 Window
+    # node, was 2). Not first(): nulls sort first, so a null id_a would
+    # make first() null for the whole bucket and silently turn the star
+    # cap into a bare cap.
     wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
         raw.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_min_a", F.first(id_a).over(wr))
+        .withColumn("_min_a", F.min(id_a).over(wr))
         .withColumn(
             "_keep",
             (F.col("_rn") <= cap) | (F.col(id_a) == F.col("_min_a")),

@@ -104,17 +104,14 @@ def increment_tuning(
             8, spark.sparkContext.defaultParallelism // 4
         )
     prev = spark.conf.get(key, "true")
-    sprev = spark.conf.get(skey, None)
+    sprev = spark.conf.get(skey)
     spark.conf.set(key, "false")
     spark.conf.set(skey, str(int(shuffle_partitions)))
     try:
         yield
     finally:
         spark.conf.set(key, prev)
-        if sprev is None:
-            spark.conf.unset(skey)
-        else:
-            spark.conf.set(skey, sprev)
+        spark.conf.set(skey, sprev)
 
 def _pin(df: DataFrame) -> DataFrame:
     """Eagerly truncate an INCREMENT-sized frame's lineage
@@ -490,10 +487,8 @@ def _merge_labels(
 def _score_increment_pairs(
     feats_all: DataFrame, pairs: DataFrame, cfg: MatchConfig, pin: bool
 ) -> DataFrame:
-    """Score an increment's candidate pairs — the shared tail of
-    ``incremental_link`` and ``incremental_link_contracted`` (one site so
-    the Arrow sizing / caching / pinning tuning cannot drift between the
-    two paths)."""
+    """Score an increment's candidate pairs (match-only), with the Arrow
+    stage sized from the counted pair volume."""
     _p = _pin if pin else track_cache
     pairs = _p(pairs)
     # Scoring only needs features for docs that actually appear in a
@@ -542,8 +537,13 @@ def incremental_link(
     existing_key_counts: DataFrame | None = None,
     assume_disjoint_ids: bool = False,
     pin: bool = True,
+    contract_dups: bool = False,
 ) -> dict[str, DataFrame]:
     """Link ``new_turns`` against committed (features, clusters) state.
+
+    ``existing_clusters`` must cover ALL committed docs — it is both the
+    re-delivery filter and the label base (in contraction mode it also
+    covers the collapsed members, which have no feature rows).
 
     ``pin=True`` (default) eagerly truncates the lineage of the
     increment-sized intermediates (``_pin``) so no downstream action
@@ -574,94 +574,26 @@ def incremental_link(
     state merge (re-delivery safety); set True to skip that pass when
     the ingest path already guarantees exactly-once ids.
 
-    Returns dict with the NEXT committed state — ``features`` (union),
-    ``new_features`` (just the increment's post-anti-join feature rows:
-    what an append-only commit writes), ``keys`` / ``key_counts`` (union
-    blocking state, so a daily-cadence
-    caller chains increments without ever re-deriving the corpus) —
-    plus ``scored`` (match pairs touching the increment), ``clusters``
-    (updated full labeling), ``cc_metrics``, and three audits:
-    ``hot_key_audit``, ``pair_cap_audit`` (drops within THIS run) and
-    ``cap_risk_audit`` (keys whose full pair population could cap in ANY
-    ranking — batch, base or incremental). Batch-equivalence is
-    guaranteed when ``hot_key_audit`` and ``cap_risk_audit`` are both
-    empty AND anchors are pinned/disabled: hot members and C(members, 2)
-    only grow from base to union, so empty union-side audits cover the
-    base run's caps as well.
-    """
-    _p = _pin if pin else track_cache
-    new_feats = featurize(canonicalize(new_turns), cfg)
-    # A RE-DELIVERED conv_id (at-least-once upstream delivery) would
-    # silently duplicate feature rows and double-count key members in
-    # merge_key_state, corrupting member caps with no audit signal
-    # (round-3 ADVICE) — drop increment rows whose id is already
-    # committed. Ids-only anti-join: the corpus side is a narrow
-    # column-pruned projection; callers that guarantee disjoint ids
-    # (e.g. a dedup'd ingest log) skip the pass via assume_disjoint_ids.
-    if not assume_disjoint_ids:
-        new_feats = new_feats.join(
-            existing_feats.select("conv_id"), "conv_id", "left_anti"
-        )
-    new_feats = _p(new_feats)
-    new_ids = new_feats.select("conv_id")
-    feats_all = existing_feats.unionByName(new_feats)
-
-    pairs, hot_audit, pair_audit, cap_risk, union_keys, union_counts, nk = (
-        incremental_candidate_pairs(
-            feats_all, new_ids, cfg, broadcast_new, anchor_df,
-            existing_keys, existing_key_counts, new_feats,
-        )
-    )
-    scored = _score_increment_pairs(feats_all, pairs, cfg, pin)
-
-    edges = _edges_to_entities(scored, existing_clusters)
-    clusters, cc_metrics = _merge_labels(existing_clusters, edges, new_ids)
-
-    return {
-        "features": feats_all,
-        "new_features": new_feats,
-        # the increment's own pre-cap key rows (committed-state mode) —
-        # what an append-only state commit writes per batch without
-        # re-exploding the increment or re-joining the anchor snapshot
-        # (None when no committed keys were given)
-        "new_keys": nk,
-        "keys": union_keys,
-        "key_counts": union_counts,
-        "scored": scored,
-        "clusters": clusters,
-        "hot_key_audit": hot_audit,
-        "pair_cap_audit": pair_audit,
-        "cap_risk_audit": cap_risk,
-        "cc_metrics": cc_metrics,
-    }
-
-
-def incremental_link_contracted(
-    existing_rep_feats: DataFrame,
-    existing_clusters: DataFrame,
-    new_turns: DataFrame,
-    cfg: MatchConfig = DEFAULT_CONFIG,
-    broadcast_new: bool = True,
-    anchor_df: DataFrame | None = None,
-    existing_keys: DataFrame | None = None,
-    existing_key_counts: DataFrame | None = None,
-    assume_disjoint_ids: bool = False,
-    pin: bool = True,
-) -> dict[str, DataFrame]:
-    """``incremental_link`` over CONTRACTED committed state, with the
-    exact-duplicate short-circuit: an increment doc whose
-    ``(norm_text, roles_sig)`` signature (``linkage.exact_sigs``) already
-    exists in the committed rep set never enters blocking or scoring at
-    all — it is an exact-tier match of its committed twin by
-    construction, so its entity label is the twin's, delivered through
-    one ``(entity(rep), member)`` edge. At 100 TB this is the dominant
+    ``contract_dups``: the committed state is CONTRACTED
+    (``existing_feats`` holds ``linkage.contract_exact_dups``' rep rows
+    + gate-rejected rows) and the step runs the exact-duplicate
+    short-circuit: an increment doc whose ``(norm_text, roles_sig)``
+    signature (``linkage.exact_sigs``) already exists in the committed
+    rep set never enters blocking or scoring at all — it is an
+    exact-tier match of its committed twin by construction, so its
+    entity label is the twin's, delivered through one
+    ``(entity(rep), member)`` edge. At 100 TB this is the dominant
     increment shape: most incoming boilerplate is byte- or
     normalization-identical to something already seen, and its marginal
     cost here is one broadcast hash join, zero candidate pairs.
+    Intra-increment duplicate classes contract too: one rep enters
+    blocking, members ride a (rep, member) edge. Plain mode is the
+    identity contraction (every class a singleton) and skips the
+    signature lookup entirely.
 
-    Correctness: scoring is a pure function of each side's signature and
-    every blocking key is a function of ``norm_text``, so a signature
-    twin is behaviorally interchangeable with its rep (the
+    Short-circuit correctness: scoring is a pure function of each side's
+    signature and every blocking key is a function of ``norm_text``, so
+    a signature twin is behaviorally interchangeable with its rep (the
     ``contract_exact_dups`` argument). A dup hit's edge set in the full
     batch graph is its rep's edge set plus the (rep, hit) exact edge —
     already one component — so attaching the hit to the rep's CURRENT
@@ -670,194 +602,168 @@ def incremental_link_contracted(
     same CC (its edge targets the entity NODE). Min-id labels survive
     because the CC runs over entity labels ∪ all new ids: a hit with a
     smaller id than its component's committed label wins the min and the
-    broadcast merge map relabels the committed rows, exactly as in
-    ``incremental_link``. Equality with the plain batch run is pinned by
-    ``tests/test_incremental_contracted.py`` (single step + chained),
-    under the same population-independence conditions as the
-    uncontracted theorem (caps unbound, anchors off or frozen — pass
-    the contracted run's ``weighted_df`` snapshot as ``anchor_df`` to
-    pin anchors at full-population document frequencies).
+    broadcast merge map relabels the committed rows. Equality with the
+    plain batch run is pinned by ``tests/test_incremental_contracted.py``
+    (single step + chained), under the same population-independence
+    conditions as the plain theorem (caps unbound, anchors off or frozen
+    — pass the contracted run's ``weighted_df`` snapshot as
+    ``anchor_df`` to pin anchors at full-population document
+    frequencies).
 
-    ``existing_rep_feats``: the committed CONTRACTED feature table
-    (``contract_exact_dups``' rep rows + gate-rejected rows).
-    ``existing_clusters`` must cover ALL committed docs (collapsed
-    members included) — it is both the re-delivery filter and the label
-    base. Intra-increment duplicate classes contract too: one rep enters
-    blocking, members ride a (rep, member) edge.
-
-    Returns the ``incremental_link`` dict re-based on rep state —
-    ``rep_features`` / ``new_rep_features`` replace ``features`` /
-    ``new_features`` as the NEXT committed state (keys/key_counts are
-    rep-side) — plus ``dup_assign`` ``(conv_id, rep_id, hit)``: this
-    step's collapsed members (hit = matched a COMMITTED signature vs an
+    Returns dict with the NEXT committed state — ``features`` (union;
+    rep rows in contraction mode), ``new_features`` (just the
+    increment's post-anti-join feature rows — its reps when contracting:
+    what an append-only commit writes), ``keys`` / ``key_counts`` (union
+    blocking state, so a daily-cadence caller chains increments without
+    ever re-deriving the corpus) — plus ``scored`` (match pairs touching
+    the increment), ``clusters`` (updated full labeling), ``cc_metrics``,
+    and three audits: ``hot_key_audit``, ``pair_cap_audit`` (drops
+    within THIS run) and ``cap_risk_audit`` (keys whose full pair
+    population could cap in ANY ranking — batch, base or incremental).
+    Batch-equivalence is guaranteed when ``hot_key_audit`` and
+    ``cap_risk_audit`` are both empty AND anchors are pinned/disabled:
+    hot members and C(members, 2) only grow from base to union, so empty
+    union-side audits cover the base run's caps as well. Contraction
+    mode adds ``dup_assign`` ``(conv_id, rep_id, hit)``: this step's
+    collapsed members (hit = matched a COMMITTED signature vs an
     intra-increment one), the audit trail for docs that skipped the
     pair pipeline.
     """
-    from pipeline.linkage import exact_sigs
-
     _p = _pin if pin else track_cache
     new_feats = featurize(canonicalize(new_turns), cfg)
-    # re-delivery: clusters cover every committed doc (collapsed members
-    # included), so they — not the rep-only feature table — are the
-    # correct ids-only anti-join base here
+    # A RE-DELIVERED conv_id (at-least-once upstream delivery) would
+    # silently duplicate feature rows and double-count key members in
+    # merge_key_state, corrupting member caps with no audit signal
+    # (round-3 ADVICE) — drop increment rows whose id is already
+    # committed. Ids-only anti-join against the clusters, which cover
+    # every committed doc (collapsed members included — the rep-only
+    # feature table would miss them); callers that guarantee disjoint
+    # ids (e.g. a dedup'd ingest log) skip the pass via
+    # assume_disjoint_ids.
     if not assume_disjoint_ids:
         new_feats = new_feats.join(
             existing_clusters.select("conv_id"), "conv_id", "left_anti"
         )
     new_feats = _p(new_feats)
-    all_new_ids = new_feats.select("conv_id")
+    new_ids = new_feats.select("conv_id")
+    rep_feats, dup_assign = new_feats, None
 
-    # --- the short-circuit: committed-signature lookup -----------------
-    # increment side is small -> broadcast it; the committed rep-sig
-    # stream is a narrow projection of the rep feature table, map-side.
-    new_sigs = track_cache(exact_sigs(new_feats, cfg))
-    rep_sigs = exact_sigs(existing_rep_feats, cfg).select(
-        F.col("conv_id").alias("rep_id"), "_s1", "_s2"
-    )
-    hits = _p(
-        F.broadcast(new_sigs).join(rep_sigs, ["_s1", "_s2"])
-        .select("conv_id", "rep_id")
-    )
+    if contract_dups:
+        from pipeline.linkage import exact_sigs
 
-    # misses contract among THEMSELVES (an increment can carry its own
-    # duplicate classes); gate-rejected rows stay singleton reps
-    miss_sigs = new_sigs.join(hits.select("conv_id"), "conv_id", "left_anti")
-    miss_groups = miss_sigs.groupBy("_s1", "_s2").agg(
-        F.min("conv_id").alias("rep_id")
-    )
-    intra_map = (
-        miss_sigs.join(miss_groups, ["_s1", "_s2"])
-        .where(F.col("conv_id") != F.col("rep_id"))
-        .select("conv_id", "rep_id")
-    )
-    keep_ids = miss_groups.select(F.col("rep_id").alias("conv_id")).unionByName(
-        all_new_ids.join(new_sigs.select("conv_id"), "conv_id", "left_anti")
-    )
-    new_rep_feats = _p(
-        new_feats.join(F.broadcast(keep_ids), "conv_id", "semi")
-    )
-    new_rep_ids = new_rep_feats.select("conv_id")
-    feats_all = existing_rep_feats.unionByName(new_rep_feats)
+        # --- the short-circuit: committed-signature lookup -------------
+        # increment side is small -> broadcast it; the committed rep-sig
+        # stream is a narrow projection of the rep feature table, map-side.
+        new_sigs = track_cache(exact_sigs(new_feats, cfg))
+        rep_sigs = exact_sigs(existing_feats, cfg).select(
+            F.col("conv_id").alias("rep_id"), "_s1", "_s2"
+        )
+        hits = _p(
+            F.broadcast(new_sigs).join(rep_sigs, ["_s1", "_s2"])
+            .select("conv_id", "rep_id")
+        )
+        # misses contract among THEMSELVES (an increment can carry its
+        # own duplicate classes); gate-rejected rows stay singleton reps
+        miss_sigs = new_sigs.join(
+            hits.select("conv_id"), "conv_id", "left_anti"
+        )
+        miss_groups = miss_sigs.groupBy("_s1", "_s2").agg(
+            F.min("conv_id").alias("rep_id")
+        )
+        intra_map = (
+            miss_sigs.join(miss_groups, ["_s1", "_s2"])
+            .where(F.col("conv_id") != F.col("rep_id"))
+            .select("conv_id", "rep_id")
+        )
+        keep_ids = miss_groups.select(
+            F.col("rep_id").alias("conv_id")
+        ).unionByName(
+            new_ids.join(new_sigs.select("conv_id"), "conv_id", "left_anti")
+        )
+        rep_feats = _p(
+            new_feats.join(F.broadcast(keep_ids), "conv_id", "semi")
+        )
+        dup_assign = hits.withColumn("hit", F.lit(True)).unionByName(
+            intra_map.withColumn("hit", F.lit(False))
+        )
 
-    # --- standard incremental machinery over REP state only -----------
+    # --- standard incremental machinery over (rep) state --------------
+    feats_all = existing_feats.unionByName(rep_feats)
     pairs, hot_audit, pair_audit, cap_risk, union_keys, union_counts, nk = (
         incremental_candidate_pairs(
-            feats_all, new_rep_ids, cfg, broadcast_new, anchor_df,
-            existing_keys, existing_key_counts, new_rep_feats,
+            feats_all, rep_feats.select("conv_id"), cfg, broadcast_new,
+            anchor_df, existing_keys, existing_key_counts, rep_feats,
         )
     )
     scored = _score_increment_pairs(feats_all, pairs, cfg, pin)
 
-    # --- edges: scored rep matches + both duplicate expansions ---------
-    # committed-twin hits target the rep's CURRENT entity label (the
-    # same broadcast-sized label slice incremental_link joins per edge);
-    # intra-increment members target their rep node directly.
-    hit_edges = (
-        hits.join(
-            existing_clusters.select(
-                F.col("conv_id").alias("rep_id"),
-                F.col("entity_id").alias("src"),
-            ),
-            "rep_id",
-        ).select("src", F.col("conv_id").alias("dst"))
-    )
-    intra_edges = intra_map.select(
-        F.col("rep_id").alias("src"), F.col("conv_id").alias("dst")
-    )
-    edges = (
-        _edges_to_entities(scored, existing_clusters)
-        .unionByName(hit_edges)
-        .unionByName(intra_edges)
-    )
-    clusters, cc_metrics = _merge_labels(
-        existing_clusters, edges, all_new_ids
-    )
+    matches = scored.select("conv_id_a", "conv_id_b")
+    if dup_assign is not None:
+        # each collapsed member rides one (rep, member) exact edge: a
+        # committed twin's rep contracts to its CURRENT entity label like
+        # any committed endpoint, an intra-increment rep stays itself
+        matches = matches.unionByName(
+            dup_assign.select(
+                F.col("rep_id").alias("conv_id_a"),
+                F.col("conv_id").alias("conv_id_b"),
+            )
+        )
+    edges = _edges_to_entities(matches, existing_clusters)
+    clusters, cc_metrics = _merge_labels(existing_clusters, edges, new_ids)
 
-    dup_assign = hits.withColumn("hit", F.lit(True)).unionByName(
-        intra_map.withColumn("hit", F.lit(False))
-    )
-    return {
-        "rep_features": feats_all,
-        "new_rep_features": new_rep_feats,
-        # increment's pre-cap REP key rows (see incremental_link)
+    out = {
+        "features": feats_all,
+        "new_features": rep_feats,
+        # the increment's own pre-cap (rep) key rows (committed-state
+        # mode) — what an append-only state commit writes per batch
+        # without re-exploding the increment or re-joining the anchor
+        # snapshot (None when no committed keys were given)
         "new_keys": nk,
         "keys": union_keys,
         "key_counts": union_counts,
         "scored": scored,
         "clusters": clusters,
-        "dup_assign": dup_assign,
         "hot_key_audit": hot_audit,
         "pair_cap_audit": pair_audit,
         "cap_risk_audit": cap_risk,
         "cc_metrics": cc_metrics,
     }
+    if dup_assign is not None:
+        out["dup_assign"] = dup_assign
+    return out
 
 
-def _resolve_removed(
-    remove_ids: DataFrame, existing_clusters: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """RESOLVE a removal request against committed membership — THE
-    shared rule for both retraction modes (round-5 review: two
-    hand-maintained copies). Clusters cover every committed doc, so ids
-    never ingested drop out of ``removed`` here. Without this, an
-    unknown id (takedown racing ahead of ingestion, or a typo) would be
-    tombstoned verbatim and the streaming surface's tombstone-permanence
-    filter (``_link_batch``) would silently blackhole its future
-    FIRST-EVER arrival. The ``unmatched`` remainder is returned for
-    auditing, never tombstoned."""
-    requested = F.broadcast(remove_ids.select("conv_id").distinct())
-    removed = F.broadcast(
-        requested.join(existing_clusters.select("conv_id"), "conv_id", "semi")
+def incremental_link_contracted(
+    existing_rep_feats: DataFrame, existing_clusters: DataFrame,
+    new_turns: DataFrame, cfg: MatchConfig = DEFAULT_CONFIG, **kw,
+) -> dict[str, DataFrame]:
+    """``incremental_link`` in contraction mode, under the rep-state key
+    names (``rep_features`` / ``new_rep_features``)."""
+    out = incremental_link(
+        existing_rep_feats, existing_clusters, new_turns, cfg,
+        contract_dups=True, **kw,
     )
-    unmatched = requested.join(
-        existing_clusters.select("conv_id"), "conv_id", "left_anti"
-    )
-    return removed, unmatched
+    out["rep_features"] = out.pop("features")
+    out["new_rep_features"] = out.pop("new_features")
+    return out
 
 
-def _affected_survivors(
-    existing_clusters: DataFrame, removed: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(affected entity ids, their members, surviving member ids) — the
-    entity-bounded repair scope shared by both retraction modes.
-    Deletion effects cannot propagate past the removed docs' entities
-    (every match edge is entity-internal), so this is the complete
-    recompute scope."""
-    affected_ents = F.broadcast(
-        existing_clusters.join(removed, "conv_id", "semi")
-        .select("entity_id")
-        .distinct()
-    )
-    members = existing_clusters.join(affected_ents, "entity_id", "semi")
-    survivor_ids = members.join(removed, "conv_id", "left_anti").select(
-        "conv_id"
-    )
-    return affected_ents, members, survivor_ids
-
-
-def _decrement_key_counts(
-    existing_key_counts: DataFrame, gone_keys: DataFrame
-) -> DataFrame:
-    """Decrement the committed (family, key, members) counts by the key
-    rows in ``gone_keys`` (removal-request-sized -> the per-key decrement
-    table broadcasts); keys whose membership reaches zero drop out. The
-    ONE decrement rule for both retraction modes."""
-    gone_counts = gone_keys.groupBy("family", "key").agg(
-        F.count(F.lit(1)).alias("_gone")
-    )
+def _reissue(df: DataFrame, promotions: DataFrame) -> DataFrame:
+    """``df``'s rows of promoted old reps, re-keyed to their new rep —
+    legal for every signature-determined table (features, keys)."""
     return (
-        existing_key_counts.join(
-            F.broadcast(gone_counts), ["family", "key"], "left"
-        )
-        .select(
-            "family",
-            "key",
-            (F.col("members") - F.coalesce("_gone", F.lit(0))).alias(
-                "members"
-            ),
-        )
-        .where(F.col("members") > 0)
+        df.join(promotions, df["conv_id"] == promotions["old"])
+        .drop("conv_id", "old")
+        .withColumnRenamed("new_rep", "conv_id")
+        .select(df.columns)
     )
+
+
+_CONTRACTED_NEEDS_EDGES = (
+    "contracted retraction requires the committed match-edge table: "
+    "rep-only features cannot re-score collapsed members, so there is "
+    "no re-scoring fallback in contracted mode"
+)
 
 
 def retract(
@@ -869,6 +775,7 @@ def retract(
     existing_keys: DataFrame | None = None,
     existing_key_counts: DataFrame | None = None,
     anchor_df: DataFrame | None = None,
+    dup_map: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """DECREMENTAL entity resolution: delete conversations from committed
     state and repair the labeling — the right-to-be-forgotten / takedown
@@ -920,106 +827,12 @@ def retract(
     min-label handoff, synth equality, both edge-recovery modes, chain
     with ``incremental_link``).
 
-    Returns dict: ``features`` / ``keys`` / ``key_counts`` (committed
-    state minus removed — narrow anti-joins / count decrements; on
-    parquet state a caller rewrites, on table-format state these are the
-    tombstone semantics ``pipeline.streaming.retract_from_state``
-    implements), ``clusters`` (repaired labels over remaining docs),
-    ``match_edges`` (surviving committed edges, when given),
-    ``removed`` (the resolved removal set), ``rescored`` (the affected
-    re-scored pairs when ``match_edges`` was absent), ``cc_metrics``.
-    """
-    if match_edges is None:
-        # Same hazard the committed-state paths fail loudly on: the
-        # re-scoring mode re-blocks survivors, and without the committed
-        # (token, df) snapshot the anchor family's df would be computed
-        # over the affected-entity SURVIVOR SLICE alone — corpus-common
-        # tokens look rare, bogus anchor keys mint extra candidate
-        # pairs, and two affected entities the equality theorem keeps
-        # separate can silently merge. Fail before any plan is built.
-        require_anchor_snapshot(
-            cfg, anchor_df, "retract() without match_edges (re-blocks survivors)"
-        )
-    removed, unmatched = _resolve_removed(remove_ids, existing_clusters)
-
-    affected_ents, members, survivor_ids = _affected_survivors(
-        existing_clusters, removed
-    )
-
-    rescored = None
-    if match_edges is not None:
-        # committed match edges: entity-internal by construction, so a
-        # src-side semi-join against the affected members selects every
-        # affected edge; both-endpoint anti-joins drop removed docs.
-        sub_edges = (
-            match_edges.join(
-                members.select(F.col("conv_id").alias("src")), "src", "semi"
-            )
-            .join(removed.select(F.col("conv_id").alias("src")), "src", "left_anti")
-            .join(removed.select(F.col("conv_id").alias("dst")), "dst", "left_anti")
-        )
-    else:
-        surv_feats = track_cache(
-            existing_feats.join(survivor_ids, "conv_id", "semi")
-        )
-        pairs, _ = candidate_pairs(surv_feats, cfg, anchor_df=anchor_df)
-        rescored = score_pairs(surv_feats, pairs, cfg, match_only=True)
-        sub_edges = rescored.select(
-            F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-        )
-
-    repaired, cc_metrics = connected_components(
-        sub_edges, all_nodes=survivor_ids
-    )
-    clusters = existing_clusters.join(
-        affected_ents, "entity_id", "left_anti"
-    ).unionByName(repaired.select("conv_id", "entity_id"))
-
-    out: dict[str, DataFrame] = {
-        "features": existing_feats.join(removed, "conv_id", "left_anti"),
-        "clusters": clusters,
-        "removed": removed,
-        "unmatched": unmatched,
-        "cc_metrics": cc_metrics,
-    }
-    if rescored is not None:
-        out["rescored"] = rescored
-    if match_edges is not None:
-        out["match_edges"] = (
-            match_edges.join(
-                removed.select(F.col("conv_id").alias("src")), "src", "left_anti"
-            ).join(
-                removed.select(F.col("conv_id").alias("dst")), "dst", "left_anti"
-            )
-        )
-    if existing_keys is not None:
-        out["keys"] = existing_keys.join(removed, "conv_id", "left_anti")
-        if existing_key_counts is not None:
-            out["key_counts"] = _decrement_key_counts(
-                existing_key_counts,
-                existing_keys.join(removed, "conv_id", "semi"),
-            )
-    return out
-
-
-def retract_contracted(
-    existing_rep_feats: DataFrame,
-    existing_clusters: DataFrame,
-    dup_map: DataFrame,
-    remove_ids: DataFrame,
-    cfg: MatchConfig = DEFAULT_CONFIG,
-    match_edges: DataFrame | None = None,
-    existing_keys: DataFrame | None = None,
-    existing_key_counts: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """``retract`` over CONTRACTED committed state (rep-only features) —
-    deletion with REPRESENTATIVE PROMOTION.
-
-    A contracted state stores one feature/key row per exact-duplicate
-    signature class (``linkage.contract_exact_dups``: rep = class-min
-    conv_id) and attaches every collapsed member to its rep through one
-    ``dup_map`` row and one (rep, member) star edge. Deleting a doc from
-    that state has three shapes:
+    ``dup_map`` given: the state is CONTRACTED (rep-only features; one
+    feature/key row per exact-duplicate signature class,
+    ``linkage.contract_exact_dups``: rep = class-min conv_id, every
+    collapsed member attached through one ``dup_map`` row and one
+    (rep, member) star edge) and deletion runs REPRESENTATIVE
+    PROMOTION. Deleting a doc from that state has three shapes:
 
     * a collapsed MEMBER: drop its cluster row, dup row and star edge —
       members are star leaves, so nothing can split;
@@ -1036,186 +849,236 @@ def retract_contracted(
       what re-scoring the promoted rep against the same candidates would
       produce, with ZERO re-scoring;
     * a REP whose whole class is removed: its edges disappear with it —
-      the entity-bounded CC repair below resolves any split it bridged.
+      the entity-bounded CC repair resolves any split it bridged.
 
-    Labels are then repaired ONLY inside affected entities, exactly like
-    ``retract``: CC over the patched surviving edge subgraph, untouched
-    entities never enter a shuffle. Equality theorem (same cap/anchor
-    scope as ``retract``): the patched graph restricted to survivors IS
-    the fresh contracted-batch match graph over the remaining corpus —
-    scored rep-rep edges survive endpoint rewriting unchanged in truth
-    value, and each class's star re-centers on the new class minimum —
-    so repaired labels equal ``build_contracted_plan`` + CC over the
-    remaining turns (pinned by ``tests/test_retract.py``).
-
-    ``match_edges`` is REQUIRED: rep-only features cannot re-score
-    collapsed members (they have no feature rows), so there is no
-    re-scoring fallback in contracted mode — committed match edges are
-    part of the contracted state's contract (``streaming._link_batch``
-    commits them every batch).
-
-    One documented approximation: a promoted feature row inherits the
-    retracted rep's non-signature provenance columns (``first_ts``,
-    ``n_turns`` is signature-determined, ``first_ts`` is not) — the
+    Contracted equality theorem (same cap/anchor scope): the patched
+    graph restricted to survivors IS the fresh contracted-batch match
+    graph over the remaining corpus — scored rep-rep edges survive
+    endpoint rewriting unchanged in truth value, and each class's star
+    re-centers on the new class minimum — so repaired labels equal
+    ``build_plan(contract_dups=True)`` + CC over the remaining turns
+    (pinned by ``tests/test_retract_contracted.py``). ``match_edges`` is
+    REQUIRED in this mode: rep-only features cannot re-score collapsed
+    members (they have no feature rows), so the re-scoring fallback is
+    plain-only — committed match edges are part of the contracted
+    state's contract (``streaming._link_batch`` commits them every
+    batch). One documented approximation: a promoted feature row
+    inherits the retracted rep's non-signature provenance columns
+    (``n_turns`` is signature-determined, ``first_ts`` is not) — the
     class's first-seen timestamp, not the promoted member's own. No
     blocking key, score channel, signature hash or cluster label reads
     that column, so linkage behavior is bit-identical; a fresh rebuild
     from raw turns would carry the member's own timestamp.
 
-    Returns dict:
-      ``rep_features`` / ``keys`` / ``key_counts`` — the patched
-      committed state (removed rows dropped, promoted rows added);
-      ``promoted_features`` / ``promoted_keys`` / ``promoted_edges`` /
-      ``promoted_dups`` — the promotion DELTAS alone (what an
-      append-only + tombstone state layout commits,
-      ``streaming.retract_from_state``);
-      ``match_edges`` — the full patched edge table;
-      ``dup_map`` — the patched member->rep table (extra columns, e.g.
-      the streaming layout's ``hit`` flag, pass through);
-      ``promotions`` — (old, new_rep) promotion pairs;
-      ``clusters`` — repaired labels; ``removed``; ``cc_metrics``.
+    Returns dict: ``features`` / ``keys`` / ``key_counts`` (committed
+    state minus removed — narrow anti-joins / count decrements, plus the
+    promoted rows; on parquet state a caller rewrites, on table-format
+    state these are the tombstone semantics
+    ``pipeline.streaming.retract_from_state`` implements), ``clusters``
+    (repaired labels over remaining docs), ``match_edges`` (surviving,
+    endpoint-patched committed edges, when given), ``removed`` (the
+    resolved removal set), ``unmatched``, ``rescored`` (the affected
+    re-scored pairs when ``match_edges`` was absent), ``cc_metrics``.
+    With ``dup_map`` also: ``promoted_features`` / ``promoted_keys`` /
+    ``promoted_edges`` / ``promoted_dups`` — the promotion DELTAS alone
+    (what an append-only + tombstone state layout commits); ``dup_map``
+    — the patched member->rep table (extra columns, e.g. the streaming
+    layout's ``hit`` flag, pass through); ``promotions`` — (old,
+    new_rep) promotion pairs.
     """
     if match_edges is None:
-        raise ValueError(
-            "retract_contracted requires the committed match-edge table: "
-            "rep-only features cannot re-score collapsed members, so "
-            "there is no re-scoring fallback in contracted mode"
+        if dup_map is not None:
+            raise ValueError(_CONTRACTED_NEEDS_EDGES)
+        # Same hazard the committed-state paths fail loudly on: the
+        # re-scoring mode re-blocks survivors, and without the committed
+        # (token, df) snapshot the anchor family's df would be computed
+        # over the affected-entity SURVIVOR SLICE alone — corpus-common
+        # tokens look rare, bogus anchor keys mint extra candidate
+        # pairs, and two affected entities the equality theorem keeps
+        # separate can silently merge. Fail before any plan is built.
+        require_anchor_snapshot(
+            cfg, anchor_df, "retract() without match_edges (re-blocks survivors)"
         )
-    removed, unmatched = _resolve_removed(remove_ids, existing_clusters)
-
-    # --- representative promotion ---------------------------------------
-    # surviving members only; a removed member can never be promoted
-    dup_clean = dup_map.join(removed, "conv_id", "left_anti")
-    promotions = F.broadcast(
-        dup_clean.join(
-            removed.select(F.col("conv_id").alias("rep_id")), "rep_id", "semi"
-        )
-        .groupBy("rep_id")
-        .agg(F.min("conv_id").alias("new_rep"))
-        .select(F.col("rep_id").alias("old"), "new_rep")
+    # RESOLVE the request against committed membership: clusters cover
+    # every committed doc, so ids never ingested drop out of ``removed``.
+    # Without this, an unknown id (takedown racing ahead of ingestion, or
+    # a typo) would be tombstoned verbatim and the streaming surface's
+    # tombstone-permanence filter (``_link_batch``) would silently
+    # blackhole its future FIRST-EVER arrival. The ``unmatched``
+    # remainder is returned for auditing, never tombstoned.
+    committed_ids = existing_clusters.select("conv_id")
+    requested = F.broadcast(remove_ids.select("conv_id").distinct())
+    removed = F.broadcast(requested.join(committed_ids, "conv_id", "semi"))
+    unmatched = requested.join(committed_ids, "conv_id", "left_anti")
+    # the entity-bounded repair scope: deletion effects cannot propagate
+    # past the removed docs' entities (every match edge is
+    # entity-internal), so this is the complete recompute scope
+    affected_ents = F.broadcast(
+        existing_clusters.join(removed, "conv_id", "semi")
+        .select("entity_id")
+        .distinct()
     )
-
-    promoted_feats = (
-        existing_rep_feats.join(
-            promotions, existing_rep_feats["conv_id"] == promotions["old"]
-        )
-        .drop("conv_id", "old")
-        .withColumnRenamed("new_rep", "conv_id")
-        .select(existing_rep_feats.columns)
+    members = existing_clusters.join(affected_ents, "entity_id", "semi")
+    survivor_ids = members.join(removed, "conv_id", "left_anti").select(
+        "conv_id"
     )
-    rep_features = existing_rep_feats.join(
-        removed, "conv_id", "left_anti"
-    ).unionByName(promoted_feats)
+    out: dict[str, DataFrame] = {"removed": removed, "unmatched": unmatched}
+    features = existing_feats.join(removed, "conv_id", "left_anti")
+    promotions = None
 
-    # class survivors re-point at the promoted rep; the promoted member's
-    # own row disappears (it IS the rep now). Extra columns (streaming's
-    # ``hit``) ride along untouched.
-    dup_patched = (
-        dup_clean.join(
-            promotions, dup_clean["rep_id"] == promotions["old"], "left"
+    if dup_map is not None:
+        # --- representative promotion -----------------------------------
+        # surviving members only; a removed member can never be promoted
+        dup_clean = dup_map.join(removed, "conv_id", "left_anti")
+        promotions = F.broadcast(
+            dup_clean.join(
+                removed.select(F.col("conv_id").alias("rep_id")),
+                "rep_id",
+                "semi",
+            )
+            .groupBy("rep_id")
+            .agg(F.min("conv_id").alias("new_rep"))
+            .select(F.col("rep_id").alias("old"), "new_rep")
         )
-        .withColumn("rep_id", F.coalesce("new_rep", "rep_id"))
-        .drop("old", "new_rep")
-        .where(F.col("conv_id") != F.col("rep_id"))
-    )
-    promoted_dups = dup_patched.join(
-        promotions.select(F.col("new_rep").alias("rep_id")), "rep_id", "semi"
-    ).select(dup_clean.columns)
-    dup_patched = dup_patched.select(dup_clean.columns)
+        promoted_feats = _reissue(existing_feats, promotions)
+        features = features.unionByName(promoted_feats)
+        # class survivors re-point at the promoted rep; the promoted
+        # member's own row disappears (it IS the rep now). Extra columns
+        # (streaming's ``hit``) ride along untouched.
+        dup_patched = (
+            dup_clean.join(
+                promotions, dup_clean["rep_id"] == promotions["old"], "left"
+            )
+            .withColumn("rep_id", F.coalesce("new_rep", "rep_id"))
+            .drop("old", "new_rep")
+            .where(F.col("conv_id") != F.col("rep_id"))
+        )
+        out.update(
+            promotions=promotions,
+            promoted_features=promoted_feats,
+            promoted_dups=dup_patched.join(
+                promotions.select(F.col("new_rep").alias("rep_id")),
+                "rep_id",
+                "semi",
+            ).select(dup_clean.columns),
+            dup_map=dup_patched.select(dup_clean.columns),
+        )
+        # edge patch: endpoint-rewrite; the (old_rep, new_rep) star edge
+        # rewrites to a self-loop and is dropped (the promoted rep needs
+        # no edge to itself)
+        match_edges = (
+            match_edges.join(
+                promotions.select(
+                    F.col("old").alias("src"), F.col("new_rep").alias("_nsrc")
+                ),
+                "src",
+                "left",
+            )
+            .join(
+                promotions.select(
+                    F.col("old").alias("dst"), F.col("new_rep").alias("_ndst")
+                ),
+                "dst",
+                "left",
+            )
+            .select(
+                F.coalesce("_nsrc", "src").alias("src"),
+                F.coalesce("_ndst", "dst").alias("dst"),
+                (F.col("_nsrc").isNotNull() | F.col("_ndst").isNotNull())
+                .alias("_patched"),
+            )
+            .where(F.col("src") != F.col("dst"))
+        )
 
-    # --- edge patch: endpoint-rewrite, then drop removed + self-loops ---
-    rewritten = (
-        match_edges.join(
-            promotions.select(
-                F.col("old").alias("src"), F.col("new_rep").alias("_nsrc")
-            ),
-            "src",
-            "left",
-        )
-        .join(
-            promotions.select(
-                F.col("old").alias("dst"), F.col("new_rep").alias("_ndst")
-            ),
-            "dst",
-            "left",
-        )
-        .select(
-            F.coalesce("_nsrc", "src").alias("src"),
-            F.coalesce("_ndst", "dst").alias("dst"),
-            (F.col("_nsrc").isNotNull() | F.col("_ndst").isNotNull()).alias(
-                "_patched"
-            ),
-        )
-    )
-    # rewritten endpoints are survivors by construction, so the removed
-    # anti-joins only ever drop edges touching removed-and-not-promoted
-    # ids; the (old_rep, new_rep) star edge rewrites to a self-loop and
-    # is dropped (the promoted rep needs no edge to itself).
-    edges_patched = (
-        rewritten.join(
+    if match_edges is not None:
+        # rewritten endpoints are survivors by construction, so the
+        # both-endpoint anti-joins only ever drop edges touching
+        # removed-and-not-promoted ids
+        kept_edges = match_edges.join(
             removed.select(F.col("conv_id").alias("src")), "src", "left_anti"
-        )
-        .join(
+        ).join(
             removed.select(F.col("conv_id").alias("dst")), "dst", "left_anti"
         )
-        .where(F.col("src") != F.col("dst"))
-    )
-    promoted_edges = edges_patched.where("_patched").select("src", "dst")
-    edges_patched = edges_patched.select("src", "dst")
+        if promotions is not None:
+            out["promoted_edges"] = kept_edges.where("_patched").select(
+                "src", "dst"
+            )
+            kept_edges = kept_edges.select("src", "dst")
+        out["match_edges"] = kept_edges
+        # committed edges are entity-internal (and promotion stays inside
+        # the entity: new_rep was a member of old_rep's entity), so a
+        # src-side semi-join selects exactly the affected subgraph
+        sub_edges = kept_edges.join(
+            members.select(F.col("conv_id").alias("src")), "src", "semi"
+        )
+    else:
+        surv_feats = track_cache(
+            existing_feats.join(survivor_ids, "conv_id", "semi")
+        )
+        pairs, _ = candidate_pairs(surv_feats, cfg, anchor_df=anchor_df)
+        rescored = score_pairs(surv_feats, pairs, cfg, match_only=True)
+        out["rescored"] = rescored
+        sub_edges = rescored.select(
+            F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
+        )
 
-    # --- entity-bounded label repair (identical shape to ``retract``) ---
-    affected_ents, members, survivor_ids = _affected_survivors(
-        existing_clusters, removed
-    )
-    # committed edges are entity-internal and promotion stays inside the
-    # entity (new_rep was a member of old_rep's entity), so a src-side
-    # semi-join selects exactly the affected subgraph
-    sub_edges = edges_patched.join(
-        members.select(F.col("conv_id").alias("src")), "src", "semi"
-    )
     repaired, cc_metrics = connected_components(
         sub_edges, all_nodes=survivor_ids
     )
-    clusters = existing_clusters.join(
+    out["clusters"] = existing_clusters.join(
         affected_ents, "entity_id", "left_anti"
     ).unionByName(repaired.select("conv_id", "entity_id"))
-
-    out: dict[str, DataFrame] = {
-        "rep_features": rep_features,
-        "promoted_features": promoted_feats,
-        "promoted_edges": promoted_edges,
-        "promoted_dups": promoted_dups,
-        "match_edges": edges_patched,
-        "dup_map": dup_patched,
-        "promotions": promotions,
-        "clusters": clusters,
-        "removed": removed,
-        "unmatched": unmatched,
-        "cc_metrics": cc_metrics,
-    }
+    out["cc_metrics"] = cc_metrics
+    out["features"] = features
     if existing_keys is not None:
-        promoted_keys = (
-            existing_keys.join(
-                promotions, existing_keys["conv_id"] == promotions["old"]
-            )
-            .drop("conv_id", "old")
-            .withColumnRenamed("new_rep", "conv_id")
-            .select(existing_keys.columns)
-        )
-        out["promoted_keys"] = promoted_keys
-        out["keys"] = existing_keys.join(
-            removed, "conv_id", "left_anti"
-        ).unionByName(promoted_keys)
-        if existing_key_counts is not None:
+        keys = existing_keys.join(removed, "conv_id", "left_anti")
+        gone_keys = existing_keys.join(removed, "conv_id", "semi")
+        if promotions is not None:
+            promoted_keys = _reissue(existing_keys, promotions)
+            out["promoted_keys"] = promoted_keys
+            keys = keys.unionByName(promoted_keys)
             # a promoted class's keys are identical under old and new rep
             # (keys are functions of norm_text), so promotion is
             # count-neutral; only keys of FULLY-removed classes decrement
-            gone_keys = existing_keys.join(removed, "conv_id", "semi").join(
+            gone_keys = gone_keys.join(
                 promotions.select(F.col("old").alias("conv_id")),
                 "conv_id",
                 "left_anti",
             )
-            out["key_counts"] = _decrement_key_counts(
-                existing_key_counts, gone_keys
+        out["keys"] = keys
+        if existing_key_counts is not None:
+            # decrement by the gone key rows (removal-request-sized -> the
+            # per-key decrement table broadcasts); keys whose membership
+            # reaches zero drop out
+            gone = gone_keys.groupBy("family", "key").agg(
+                F.count(F.lit(1)).alias("_gone")
             )
+            out["key_counts"] = (
+                existing_key_counts.join(
+                    F.broadcast(gone), ["family", "key"], "left"
+                )
+                .select(
+                    "family",
+                    "key",
+                    (F.col("members") - F.coalesce("_gone", F.lit(0))).alias(
+                        "members"
+                    ),
+                )
+                .where(F.col("members") > 0)
+            )
+    return out
+
+
+def retract_contracted(
+    existing_rep_feats: DataFrame, existing_clusters: DataFrame,
+    dup_map: DataFrame, remove_ids: DataFrame,
+    cfg: MatchConfig = DEFAULT_CONFIG, match_edges: DataFrame | None = None,
+    **kw,
+) -> dict[str, DataFrame]:
+    """``retract`` in contraction mode, under the rep-state key name."""
+    if match_edges is None:
+        raise ValueError(_CONTRACTED_NEEDS_EDGES)
+    out = retract(existing_rep_feats, existing_clusters, remove_ids, cfg,
+                  match_edges=match_edges, dup_map=dup_map, **kw)
+    out["rep_features"] = out.pop("features")
     return out

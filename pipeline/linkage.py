@@ -28,6 +28,7 @@ def build_plan(
     turns: DataFrame,
     cfg: MatchConfig = DEFAULT_CONFIG,
     anchor_df: DataFrame | None = None,
+    contract_dups: bool = False,
 ) -> dict[str, DataFrame]:
     """Lazy end-to-end plan. Clustering needs actions (iterative), so the
     returned ``edges`` is the match edge list; call
@@ -39,25 +40,92 @@ def build_plan(
     re-derives the canonicalize aggregation + MinHash for every branch
     (measured 12 scans of the turns table). run_staged gets the same
     effect from stage materialization.
+
+    ``contract_dups`` runs the exact-dup contraction pre-pass
+    (``contract_exact_dups``): only class representatives are blocked
+    and scored, and ``edges`` adds one (rep, member) edge per collapsed
+    member. Plain mode is the identity contraction — every class is a
+    singleton, ``rep_features`` IS ``features``, ``dup_map`` is None —
+    and builds no signature join at all.
+
+    Equivalence (tested, ``tests/test_contraction.py``): when no member /
+    pair cap binds, the contracted ``clusters`` equal the plain run's
+    EXACTLY — (i) keys are functions of norm_text and anchor df is pinned
+    to full-population statistics via ``weighted_df``, so the rep pair
+    set is the full candidate set restricted to reps; (ii) scoring
+    depends only on the signature, so rep decisions equal member
+    decisions; (iii) each class is internally exact-matched in the full
+    run and uniformly connected externally, so components correspond
+    1:1 under the blow-up, and min-id labels agree because the rep IS
+    its class minimum. When caps DO bind, contraction is the STRONGER
+    path: the mega-group never becomes a hot key at all (one rep), so
+    no lossy coin-capping is needed for exact-duplicate skew — the skew
+    bench asserts label equality there empirically. Contracted
+    ``scored`` / audit tables describe REP pairs (one row per class
+    pair, not per member pair) — like ``audit_sample_rate``, pair-level
+    statistics are estimates of the full pair population; entity labels
+    are not.
+
+    ``anchor_df`` in the result is the (token, df) snapshot the pairing
+    used (the full-population ``weighted_df`` when contracting, else the
+    one passed in) — commit it next to the state so increments and
+    retractions pin anchors to the SAME statistics.
     """
     from pipeline.session import track_cache
 
     docs = canonicalize(turns)
     feats = track_cache(featurize(docs, cfg))
-    pairs, hot_audit = candidate_pairs(feats, cfg, anchor_df=anchor_df)
-    pairs = track_cache(pairs)
-    scored = score_pairs(feats, pairs, cfg)
-    edges = scored.where("is_match").select(
-        F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
+    rep_feats, dup_map, anchor_df = _blocking_input(
+        feats, cfg, contract_dups, anchor_df
     )
+    if dup_map is not None:
+        rep_feats = track_cache(rep_feats)
+    pairs, hot_audit = candidate_pairs(rep_feats, cfg, anchor_df=anchor_df)
+    pairs = track_cache(pairs)
+    scored = score_pairs(rep_feats, pairs, cfg)
     return {
         "docs": docs,
         "features": feats,
+        "rep_features": rep_feats,
+        "dup_map": dup_map,
         "pairs": pairs,
         "hot_key_audit": hot_audit,
         "scored": scored,
-        "edges": edges,
+        "edges": match_edge_list(scored, dup_map),
+        "anchor_df": anchor_df,
     }
+
+
+def _blocking_input(
+    feats: DataFrame,
+    cfg: MatchConfig,
+    contract_dups: bool,
+    anchor_df: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+    """``(block_feats, dup_map, anchor_df)`` for the pair stage:
+    ``contract_exact_dups`` when contracting, else the identity
+    ``(feats, None, anchor_df)``."""
+    if contract_dups:
+        return contract_exact_dups(feats, cfg)
+    return feats, None, anchor_df
+
+
+def match_edge_list(
+    scored: DataFrame, dup_map: DataFrame | None = None
+) -> DataFrame:
+    """``(src, dst)`` match edges: the scored matches plus, in contraction
+    mode, one (rep, member) edge per collapsed member — exact-tier
+    matches by construction, so they are part of the full match graph."""
+    edges = scored.where("is_match").select(
+        F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
+    )
+    if dup_map is None:
+        return edges
+    return edges.unionByName(
+        dup_map.select(
+            F.col("rep_id").alias("src"), F.col("conv_id").alias("dst")
+        )
+    )
 
 
 def cluster_edges(
@@ -72,9 +140,9 @@ def exact_sigs(feats: DataFrame, cfg: MatchConfig = DEFAULT_CONFIG) -> DataFrame
     ``(norm_text, roles_sig)``, the full behavioral identity of a doc
     (every blocking key and every score channel is a function of those
     two columns). Shared by ``contract_exact_dups`` and the incremental
-    short-circuit (``incremental.incremental_link_contracted``), which
-    must agree bit-for-bit on class identity across runs. Narrow: one
-    projection, no shuffle."""
+    short-circuit (``incremental.incremental_link``'s contraction mode),
+    which must agree bit-for-bit on class identity across runs. Narrow:
+    one projection, no shuffle."""
     from pipeline.blocking import required_feature_gate
     from pipeline.features import hash_fn
 
@@ -101,7 +169,7 @@ def contract_exact_dups(
     against every third doc, and their own pair is an exact-tier match.
     Contracting each equivalence class to its minimum conv_id therefore
     preserves entity labels EXACTLY (when no lossy cap binds; see
-    ``build_contracted_plan``) while removing the quadratic pair blowup
+    ``build_plan``) while removing the quadratic pair blowup
     a mega-duplicate group causes — the exact-dup pre-pass the skew-scale
     run's caveat calls for (BENCH/skew_scale.md: hub fan-in is linear but
     still one edge per dropped member; contraction removes those members
@@ -165,60 +233,8 @@ def contract_exact_dups(
 def build_contracted_plan(
     turns: DataFrame, cfg: MatchConfig = DEFAULT_CONFIG
 ) -> dict[str, DataFrame]:
-    """``build_plan`` with the exact-dup contraction pre-pass.
-
-    Equivalence (tested, ``tests/test_contraction.py``): when no member /
-    pair cap binds, the final ``clusters`` equal the uncontracted run's
-    EXACTLY — (i) keys are functions of norm_text and anchor df is pinned
-    to full-population statistics via ``weighted_df``, so the rep pair
-    set is the full candidate set restricted to reps; (ii) scoring
-    depends only on the signature, so rep decisions equal member
-    decisions; (iii) each class is internally exact-matched in the full
-    run and uniformly connected externally, so components correspond
-    1:1 under the blow-up, and min-id labels agree because the rep IS
-    its class minimum. When caps DO bind, contraction is the STRONGER
-    path: the mega-group never becomes a hot key at all (one rep), so
-    no lossy coin-capping is needed for exact-duplicate skew — the skew
-    bench asserts label equality there empirically.
-
-    ``scored`` / audit tables describe REP pairs (one row per class
-    pair, not per member pair) — like ``audit_sample_rate``, pair-level
-    statistics are estimates of the full pair population; entity labels
-    are not.
-    """
-    from pipeline.session import track_cache
-
-    docs = canonicalize(turns)
-    feats = track_cache(featurize(docs, cfg))
-    rep_feats, dup_map, weighted_df = contract_exact_dups(feats, cfg)
-    rep_feats = track_cache(rep_feats)
-    pairs, hot_audit = candidate_pairs(rep_feats, cfg, anchor_df=weighted_df)
-    pairs = track_cache(pairs)
-    scored = score_pairs(rep_feats, pairs, cfg)
-    edges = scored.where("is_match").select(
-        F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-    )
-    # expand: one (rep, member) edge per collapsed member — exact-tier
-    # matches by construction, so they are part of the full match graph
-    edges = edges.unionByName(
-        dup_map.select(
-            F.col("rep_id").alias("src"), F.col("conv_id").alias("dst")
-        )
-    )
-    return {
-        "docs": docs,
-        "features": feats,
-        "rep_features": rep_feats,
-        "dup_map": dup_map,
-        "pairs": pairs,
-        "hot_key_audit": hot_audit,
-        "scored": scored,
-        "edges": edges,
-        # the full-population (token, df) snapshot the pairing used —
-        # commit it next to the state so increments/retractions pin
-        # anchors to the SAME statistics (incremental_link's anchor_df)
-        "anchor_df": weighted_df,
-    }
+    """``build_plan`` in contraction mode."""
+    return build_plan(turns, cfg, contract_dups=True)
 
 
 def best_matches(scored: DataFrame) -> DataFrame:
@@ -330,13 +346,15 @@ def run_staged(
     docs = runner.run("docs", lambda: canonicalize(turns))
     feats = runner.run("features", lambda: featurize(docs, cfg))
 
+    block_feats, dup_map, anchor_df = _blocking_input(feats, cfg, contract_dups)
     if contract_dups:
-        _contracted = contract_exact_dups(feats, cfg)
-        block_feats = runner.run("rep_features", lambda: _contracted[0])
-        dup_map = runner.run("dup_map", lambda: _contracted[1])
-        anchor_df = runner.run("anchor_df", lambda: _contracted[2])
-    else:
-        block_feats, dup_map, anchor_df = feats, None, None
+        block_feats, dup_map, anchor_df = (
+            runner.run(name, lambda df=df: df)
+            for name, df in zip(
+                ("rep_features", "dup_map", "anchor_df"),
+                (block_feats, dup_map, anchor_df),
+            )
+        )
 
     def _pairs() -> DataFrame:
         p, hot, pair_cap = candidate_pairs(
@@ -355,18 +373,9 @@ def run_staged(
     )
 
     def _clusters() -> DataFrame:
-        edges = scored.where("is_match").select(
-            F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-        )
-        if dup_map is not None:
-            edges = edges.unionByName(
-                dup_map.select(
-                    F.col("rep_id").alias("src"),
-                    F.col("conv_id").alias("dst"),
-                )
-            )
         clusters, cc_metrics = connected_components(
-            edges, all_nodes=feats.select("conv_id")
+            match_edge_list(scored, dup_map),
+            all_nodes=feats.select("conv_id"),
         )
         runner.metrics.extend(
             {"stage": "cc", **m} for m in cc_metrics

@@ -414,8 +414,8 @@ def _link_batch(
     """
     import os
 
-    from pipeline.incremental import incremental_link, incremental_link_contracted
-    from pipeline.linkage import build_contracted_plan, build_plan, cluster_edges
+    from pipeline.incremental import incremental_link
+    from pipeline.linkage import build_plan, cluster_edges, match_edge_list
     from pipeline.session import release_caches
 
     if batch_df.isEmpty():
@@ -440,8 +440,9 @@ def _link_batch(
         # A tombstoned conversation is DELETED, not merely hidden: an
         # at-least-once upstream replaying the very data a takedown
         # removed must not resurrect it. Without this filter the
-        # re-delivery anti-join (which sees only tombstone-FILTERED
-        # committed features) would admit the id as new — labeled in
+        # re-delivery anti-join (which sees only the committed clusters,
+        # from which the retraction removed the id) would admit the id
+        # as new — labeled in
         # clusters but invisible in every _load_state read, since the
         # tombstone anti-joins ALL dirs including post-retraction ones:
         # a half-resurrected id that can never match again and silently
@@ -465,21 +466,19 @@ def _link_batch(
     if state is None:
         from pipeline.blocking import key_table_with_counts, token_df
 
-        if contracted:
-            plan = build_contracted_plan(batch_df, cfg)
-            # committed feature state holds REP rows only; the labeling
-            # covers every doc (collapsed members ride dup_map edges)
-            stored_feats = plan["rep_features"]
-            # class-multiplicity-weighted (token, df) == token_df over
-            # the FULL base corpus — the snapshot the rep pairing used
-            anchor_snapshot = plan["anchor_df"]
-        else:
-            plan = build_plan(batch_df, cfg)
-            stored_feats = plan["features"]
-            # the same (token, df) stats candidate_pairs derived
-            # internally — frozen here so every increment (and
-            # retraction) blocks against base-population anchors
-            # instead of recomputing df over its own tiny slice
+        plan = build_plan(batch_df, cfg, contract_dups=contracted)
+        # committed feature state holds REP rows only when contracting;
+        # the labeling covers every doc (collapsed members ride dup_map
+        # edges)
+        stored_feats = plan["rep_features"]
+        # the (token, df) snapshot the pairing used — the class-
+        # multiplicity-weighted one when contracting (== token_df over
+        # the FULL base corpus); plain runs derive it internally, so the
+        # same stats are computed here — frozen so every increment (and
+        # retraction) blocks against base-population anchors instead of
+        # recomputing df over its own tiny slice
+        anchor_snapshot = plan["anchor_df"]
+        if anchor_snapshot is None:
             anchor_snapshot = token_df(plan["features"], cfg)
         # the batch's MATCH-EDGE contribution (src, dst) — append-only
         # like features/keys. Committing it is what makes
@@ -487,8 +486,8 @@ def _link_batch(
         # match_edges path: filter committed edges instead of
         # re-blocking + re-scoring survivors) — match edges are a small
         # fraction of pair volume and were being computed then thrown
-        # away every batch (round-5 review). In contracted mode
-        # plan["edges"] already includes the (rep, member) expansions.
+        # away every batch (round-5 review). plan["edges"] already
+        # includes any (rep, member) expansions.
         # Written FIRST and read back so the iterative CC below consumes
         # the parquet leaf instead of re-running the scoring subtree.
         plan["edges"].write.mode("overwrite").parquet(edir)
@@ -509,7 +508,7 @@ def _link_batch(
         clusters.write.mode("overwrite").parquet(ldir)
         edge_dirs = [edir]
         dup_dirs: list[str] = []
-        if contracted:
+        if plan["dup_map"] is not None:
             # (conv_id, rep_id, hit) per collapsed member — the audit
             # trail for docs that skipped the pair pipeline, and the
             # class enumeration a contracted-state takedown needs
@@ -542,21 +541,14 @@ def _link_batch(
         anchors_dir = state.get("anchors")
         adf = spark.read.parquet(anchors_dir) if anchors_dir else None
         with increment_tuning(spark):
-            if contracted:
-                out = incremental_link_contracted(
-                    feats, clusters0, batch_df, cfg, anchor_df=adf,
-                    existing_keys=keys, existing_key_counts=counts,
-                )
-                new_feats = out["new_rep_features"]
-            else:
-                out = incremental_link(
-                    feats, clusters0, batch_df, cfg, anchor_df=adf,
-                    existing_keys=keys, existing_key_counts=counts,
-                )
-                new_feats = out["new_features"]
+            out = incremental_link(
+                feats, clusters0, batch_df, cfg, anchor_df=adf,
+                existing_keys=keys, existing_key_counts=counts,
+                contract_dups=contracted,
+            )
             # append-only commits for the corpus-sized state; full
             # rewrites only for the two narrow tables
-            new_feats.write.mode("overwrite").parquet(fdir)
+            out["new_features"].write.mode("overwrite").parquet(fdir)
             # the increment's key rows: the exact pre-cap ``nk`` the
             # step already built inside incremental_candidate_pairs —
             # returned as out["new_keys"] so the commit neither
@@ -567,32 +559,22 @@ def _link_batch(
             out["new_keys"].write.mode("overwrite").parquet(kdir)
             out["key_counts"].write.mode("overwrite").parquet(cdir)
             out["clusters"].write.mode("overwrite").parquet(ldir)
-            # this batch's match-edge contribution: scored matches
-            # (match_only scoring — every row IS an edge), plus in
-            # contracted mode the (rep, member) expansions, mirroring
-            # build_contracted_plan's edge semantics
-            new_edges = out["scored"].select(
-                F.col("conv_id_a").alias("src"),
-                F.col("conv_id_b").alias("dst"),
-            )
-            if contracted:
-                new_edges = new_edges.unionByName(
-                    out["dup_assign"].select(
-                        F.col("rep_id").alias("src"),
-                        F.col("conv_id").alias("dst"),
-                    )
-                )
-                out["dup_assign"].write.mode("overwrite").parquet(ddir)
+            # this batch's match-edge contribution: scored matches plus
+            # any (rep, member) expansions — build_plan's edge semantics
+            dup_assign = out.get("dup_assign")
+            if dup_assign is not None:
+                dup_assign.write.mode("overwrite").parquet(ddir)
             if has_edges:
-                new_edges.write.mode("overwrite").parquet(edir)
+                match_edge_list(out["scored"], dup_assign).write.mode(
+                    "overwrite"
+                ).parquet(edir)
         feature_dirs = state["feature_dirs"] + [fdir]
         key_dirs = state["key_dirs"] + [kdir]
         # pre-edges states stay pre-edges (see the guard above): never
         # start an edge list that would shadow the rescore fallback
         edge_dirs = state["edge_dirs"] + [edir] if has_edges else []
-        dup_dirs = (
-            state.get("dup_dirs", []) + [ddir] if contracted else
-            state.get("dup_dirs", [])
+        dup_dirs = state.get("dup_dirs", []) + (
+            [ddir] if contracted else []
         )
     release_caches()
     payload = {
@@ -604,8 +586,8 @@ def _link_batch(
         "clusters": ldir,
         # the state's mode is part of its contract: rep-only feature/key
         # state (contracted) must never be consumed by an uncontracted
-        # step, and retraction routes by it (_retract_contracted_state's
-        # representative promotion vs retract's survivor re-score)
+        # step, and retraction routes by it (representative promotion vs
+        # survivor re-score)
         "contracted": contracted,
     }
     if dup_dirs:
@@ -687,8 +669,8 @@ def streaming_incremental_link(
 
     ``contracted=True`` (round-5): committed feature/key state holds only
     exact-dup class REPRESENTATIVES (``linkage.contract_exact_dups``) and
-    every micro-batch runs ``incremental_link_contracted`` — an arriving
-    conversation whose ``(norm_text, roles_sig)`` signature is already
+    every micro-batch runs ``incremental_link`` in contraction mode — an
+    arriving conversation whose ``(norm_text, roles_sig)`` signature is already
     committed never enters blocking or scoring, it rides one broadcast
     hash join into its twin's entity. At 100 TB this is the dominant
     arrival shape (boilerplate re-sends), so the steady-state cost per
@@ -773,11 +755,10 @@ def retract_from_state(
 ) -> dict:
     """Delete conversations from a committed ``streaming_incremental_link``
     state and repair the labeling — the operational form of
-    ``pipeline.incremental.retract`` / ``retract_contracted``
-    (right-to-be-forgotten / takedown requests against the
-    continuously-maintained entity state). Both state modes are
-    supported: CONTRACTED states route through representative promotion
-    (``_retract_contracted_state`` below).
+    ``pipeline.incremental.retract`` (right-to-be-forgotten / takedown
+    requests against the continuously-maintained entity state). Both
+    state modes run through it: CONTRACTED states pass their committed
+    dup table, so ``retract`` runs representative promotion.
 
     Run with the stream STOPPED (maintenance window): the pointer rename
     is atomic, but a concurrently-running increment would commit a
@@ -792,12 +773,18 @@ def retract_from_state(
     replay cannot resurrect it (re-admit via ``compact_state`` first).
     States carrying ``edge_dirs`` repair connectivity by FILTERING the
     committed match edges (``retract``'s zero-rescore ``match_edges``
-    mode); pre-edges layouts fall back to entity-bounded re-scoring.
-    Physical reclamation is
+    mode); plain pre-edges layouts fall back to entity-bounded
+    re-scoring. In contracted states the tombstones also hide every
+    superseded row of a promoted class — old-rep feature/key rows,
+    old-rep-endpoint edges, old-rep dup rows — at load time
+    (``_load_state`` / ``_load_edges`` / ``_load_dups``), and the
+    promotion DELTAS (the class's rows re-issued under the new rep) are
+    appended as one fresh revision-suffixed dir per table, keeping the
+    corpus-sized tables append-only. Physical reclamation is
     ``compact_state``. Crash-safe: all dirs are written under a fresh
     revision suffix, the pointer renames last; idempotent — re-running
-    the same removal finds no affected entities and commits an identical
-    labeling under a new revision.
+    the same removal finds no affected entities (and promotes nothing)
+    and commits an identical labeling under a new revision.
 
     ``remove_ids``: DataFrame with a ``conv_id`` column, or an iterable
     of id strings. Returns the committed pointer dict.
@@ -806,6 +793,7 @@ def retract_from_state(
 
     from pipeline.config import DEFAULT_CONFIG
     from pipeline.incremental import increment_tuning, retract
+    from pipeline.session import release_caches
 
     cfg = cfg or DEFAULT_CONFIG
     latest_path = os.path.join(state_dir, "_LATEST.json")
@@ -816,137 +804,15 @@ def retract_from_state(
         remove_ids = spark.createDataFrame(
             [(str(i),) for i in remove_ids], "conv_id string"
         )
-    if state.get("contracted"):
-        return _retract_contracted_state(
-            spark, state_dir, latest_path, state, remove_ids, cfg
-        )
-
-    feats, keys, counts, clusters = _load_state(spark, state)
-
-    anchors_dir = state.get("anchors")
-    adf = spark.read.parquet(anchors_dir) if anchors_dir else None
+    contracted = bool(state.get("contracted", False))
     # committed match edges (layouts from the edges_b{n} era): the
     # zero-rescore path — retraction filters the committed edge table to
     # survivors of affected entities instead of re-featurizing +
     # re-blocking + re-scoring them (retract's match_edges mode, "the
-    # 100-TB path"). Older states without edge_dirs fall back to the
-    # re-scoring mode.
+    # 100-TB path"). Older plain states without edge_dirs fall back to
+    # the re-scoring mode.
     match_edges = _load_edges(spark, state)
-    with increment_tuning(spark):
-        out = retract(
-            feats, clusters, remove_ids, cfg, anchor_df=adf,
-            match_edges=match_edges,
-            existing_keys=keys, existing_key_counts=counts,
-        )
-        return _commit_retraction(
-            spark, state_dir, latest_path, state, out, contracted=False
-        )
-
-
-def _commit_retraction(
-    spark: SparkSession,
-    state_dir: str,
-    latest_path: str,
-    state: dict,
-    out: dict,
-    *,
-    contracted: bool,
-    promoted=(),
-) -> dict:
-    """Shared commit tail for BOTH retraction modes — the crash/commit
-    protocol lives here and only here (round-5 review: the contracted
-    path had copied this sequence and the two copies had already started
-    to drift). Call inside ``increment_tuning``.
-
-    Tombstones accumulate (union with the committed table) until
-    compaction; clusters/key counts are narrow full rewrites — the same
-    cadence the stream itself pays. ``promoted`` is a sequence of
-    ``(df, dir_suffix, payload_dirs_key)`` promotion deltas (contracted
-    mode): each is written to ``{dir_suffix}_rev{rev}`` and APPENDED to
-    the payload's dir list, keeping the corpus-sized tables append-only.
-    Everything lands under a fresh revision suffix; the pointer renames
-    last, so a crash anywhere before that leaves the previous committed
-    state fully readable.
-    """
-    import os
-
-    from pipeline.session import release_caches
-
-    rev = int(state.get("rev", 0)) + 1
-    tdir = os.path.join(state_dir, f"tombstones_rev{rev}")
-    cdir = os.path.join(state_dir, f"counts_rev{rev}")
-    ldir = os.path.join(state_dir, f"clusters_rev{rev}")
-    tomb = out["removed"].select("conv_id")
-    if state.get("tombstones"):
-        tomb = tomb.unionByName(
-            spark.read.parquet(state["tombstones"]).select("conv_id")
-        ).distinct()
-    tomb.write.mode("overwrite").parquet(tdir)
-    out["clusters"].write.mode("overwrite").parquet(ldir)
-    out["key_counts"].write.mode("overwrite").parquet(cdir)
-    payload = {
-        "batch_id": state["batch_id"],
-        "feature_dirs": list(state["feature_dirs"]),
-        "key_dirs": list(state["key_dirs"]),
-        "counts": cdir,
-        "clusters": ldir,
-        "tombstones": tdir,
-        "rev": rev,
-        "contracted": contracted,
-    }
-    # edge/dup dirs stay append-only: removed ids are tombstone-filtered
-    # at load (_load_edges / _load_dups); compact_state reclaims
-    if state.get("edge_dirs"):
-        payload["edge_dirs"] = list(state["edge_dirs"])
-    if state.get("dup_dirs"):
-        payload["dup_dirs"] = list(state["dup_dirs"])
-    for df, suffix, dirs_key in promoted:
-        pdir = os.path.join(state_dir, f"{suffix}_rev{rev}")
-        df.write.mode("overwrite").parquet(pdir)
-        payload[dirs_key] = payload.get(dirs_key, []) + [pdir]
-    if state.get("anchors"):
-        payload["anchors"] = state["anchors"]
-    # never-silent: requested ids that matched no committed doc are NOT
-    # tombstoned (they would blackhole a future first ingestion) — they
-    # are counted into the committed pointer so the no-op is auditable
-    if out.get("unmatched") is not None:
-        n_unmatched = out["unmatched"].count()
-        if n_unmatched:
-            payload["unmatched_removed"] = n_unmatched
-    release_caches()
-    _pointer_commit(spark, latest_path, payload)
-    return payload
-
-
-def _retract_contracted_state(
-    spark: SparkSession,
-    state_dir: str,
-    latest_path: str,
-    state: dict,
-    remove_ids: DataFrame,
-    cfg,
-) -> dict:
-    """``retract_from_state`` for CONTRACTED (rep-only) states —
-    representative promotion over the committed layout.
-
-    The committed tables stay append-only + tombstoned exactly like an
-    increment commit: the removal set joins the tombstone table (which
-    hides the retracted docs AND every superseded row of a promoted
-    class — old-rep feature/key rows, old-rep-endpoint edges, old-rep
-    dup rows — at load time via ``_load_state`` / ``_load_edges`` /
-    ``_load_dups``), and the promotion DELTAS (the class's rows
-    re-issued under the new rep, ``incremental.retract_contracted``) are
-    appended as one fresh revision-suffixed dir per table. Clusters and
-    key counts are narrow full rewrites, as everywhere else. Crash-safe
-    and idempotent via the shared ``_commit_retraction`` tail — a re-run
-    finds the ids already tombstoned, promotes nothing, and commits an
-    identical labeling under a new revision.
-    """
-    from pipeline.incremental import increment_tuning, retract_contracted
-
-    # cfg is already defaulted by the only caller (retract_from_state)
-    match_edges = _load_edges(spark, state)
-    if match_edges is None:
+    if contracted and match_edges is None:
         raise ValueError(
             f"contracted state at {state_dir} has no committed edge dirs; "
             "representative promotion rewrites committed match edges and "
@@ -954,30 +820,77 @@ def _retract_contracted_state(
             "state uncontracted)"
         )
     feats, keys, counts, clusters = _load_state(spark, state)
-    dups = _load_dups(spark, state)
-    if dups is None:
-        dups = spark.createDataFrame(
-            [], "conv_id string, rep_id string, hit boolean"
-        )
+    dups = None
+    if contracted:
+        dups = _load_dups(spark, state)
+        if dups is None:
+            dups = spark.createDataFrame(
+                [], "conv_id string, rep_id string, hit boolean"
+            )
+    anchors_dir = state.get("anchors")
+    adf = spark.read.parquet(anchors_dir) if anchors_dir else None
     with increment_tuning(spark):
-        out = retract_contracted(
-            feats, clusters, dups, remove_ids, cfg,
+        out = retract(
+            feats, clusters, remove_ids, cfg, anchor_df=adf,
             match_edges=match_edges,
-            existing_keys=keys, existing_key_counts=counts,
+            existing_keys=keys, existing_key_counts=counts, dup_map=dups,
         )
-        return _commit_retraction(
-            spark, state_dir, latest_path, state, out, contracted=True,
-            promoted=(
-                (out["promoted_features"], "features_prom", "feature_dirs"),
-                (out["promoted_keys"], "keys_prom", "key_dirs"),
-                (out["promoted_edges"], "edges_prom", "edge_dirs"),
-                (
-                    out["promoted_dups"].select("conv_id", "rep_id", "hit"),
-                    "dups_prom",
-                    "dup_dirs",
-                ),
-            ),
-        )
+        # Tombstones accumulate (union with the committed table) until
+        # compaction; clusters/key counts are narrow full rewrites — the
+        # same cadence the stream itself pays.
+        rev = int(state.get("rev", 0)) + 1
+        tdir = os.path.join(state_dir, f"tombstones_rev{rev}")
+        cdir = os.path.join(state_dir, f"counts_rev{rev}")
+        ldir = os.path.join(state_dir, f"clusters_rev{rev}")
+        tomb = out["removed"].select("conv_id")
+        if state.get("tombstones"):
+            tomb = tomb.unionByName(
+                spark.read.parquet(state["tombstones"]).select("conv_id")
+            ).distinct()
+        tomb.write.mode("overwrite").parquet(tdir)
+        out["clusters"].write.mode("overwrite").parquet(ldir)
+        out["key_counts"].write.mode("overwrite").parquet(cdir)
+        payload = {
+            "batch_id": state["batch_id"],
+            "feature_dirs": list(state["feature_dirs"]),
+            "key_dirs": list(state["key_dirs"]),
+            "counts": cdir,
+            "clusters": ldir,
+            "tombstones": tdir,
+            "rev": rev,
+            "contracted": contracted,
+        }
+        # edge/dup dirs stay append-only: removed ids are tombstone-
+        # filtered at load (_load_edges / _load_dups); compact_state
+        # reclaims
+        if state.get("edge_dirs"):
+            payload["edge_dirs"] = list(state["edge_dirs"])
+        if state.get("dup_dirs"):
+            payload["dup_dirs"] = list(state["dup_dirs"])
+        # promotion deltas (contracted mode only): each is written to
+        # ``{suffix}_rev{rev}`` and APPENDED to the payload's dir list
+        for key, suffix, dirs_key in (
+            ("promoted_features", "features_prom", "feature_dirs"),
+            ("promoted_keys", "keys_prom", "key_dirs"),
+            ("promoted_edges", "edges_prom", "edge_dirs"),
+            ("promoted_dups", "dups_prom", "dup_dirs"),
+        ):
+            if key in out:
+                pdir = os.path.join(state_dir, f"{suffix}_rev{rev}")
+                out[key].write.mode("overwrite").parquet(pdir)
+                payload[dirs_key] = payload.get(dirs_key, []) + [pdir]
+        if state.get("anchors"):
+            payload["anchors"] = state["anchors"]
+        # never-silent: requested ids that matched no committed doc are
+        # NOT tombstoned (they would blackhole a future first ingestion)
+        # — they are counted into the committed pointer so the no-op is
+        # auditable
+        n_unmatched = out["unmatched"].count()
+        if n_unmatched:
+            payload["unmatched_removed"] = n_unmatched
+        release_caches()
+        _pointer_commit(spark, latest_path, payload)
+    return payload
 
 
 def compact_state(spark: SparkSession, state_dir: str) -> dict:

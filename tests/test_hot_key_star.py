@@ -142,6 +142,21 @@ def test_star_cap_keeps_mega_group_one_entity(spark, mega_feats):
     ).count()
     assert others == 0
 
+    # a bucket holding a null id_a row: nulls sort FIRST, and the star
+    # must still hang off the bucket's minimum non-null member instead
+    # of degrading to a bare cap
+    from pipeline.blocking import star_pair_flag
+
+    raw = spark.createDataFrame(
+        [("k", None, "x"), ("k", "a", "b"), ("k", "a", "c"),
+         ("k", "a", "d"), ("k", "b", "c")],
+        "key string, id_a string, id_b string",
+    )
+    kept = star_pair_flag(raw, ["key"], "id_a", "id_b", 1).where("_keep")
+    assert {(r["id_a"], r["id_b"]) for r in kept.collect()} == {
+        (None, "x"), ("a", "b"), ("a", "c"), ("a", "d"),
+    }
+
 
 def test_star_blocking_matches_pandas_twin(spark, mega_feats):
     """The star rule must not drift between engines: Spark

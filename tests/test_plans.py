@@ -268,3 +268,79 @@ def test_minhash_single_pass_equals_per_hash(spark):
         a = {r["conv_id"]: tuple(r[1:]) for r in single.collect()}
         b = {r["conv_id"]: tuple(r[1:]) for r in per_hash.collect()}
         assert a == b, (impl, a, b)
+
+
+def test_plain_mode_builds_no_contraction(spark):
+    """Plain mode is the identity contraction: the plans of plain
+    ``build_plan`` and plain ``incremental_link`` carry no exact-signature
+    hash (``xsig1``) and no rep/member join (``rep_id``) — the
+    contraction machinery is skipped in Python, so plain runs pay
+    nothing for it. The contracted plans of the same inputs carry both,
+    so the check cannot pass vacuously."""
+    from dataclasses import replace
+
+    import pandas as pd
+
+    from pipeline.config import DEFAULT_CONFIG
+    from pipeline.incremental import incremental_link
+    from pipeline.linkage import build_plan
+    from pipeline.session import release_caches
+
+    # anchors and the hot-key star off: smaller composed plans, and a
+    # pin=False step renders its plan in every action it runs
+    cfg = replace(DEFAULT_CONFIG, anchor_max_df=1, hot_key_star=False)
+
+    def _turns(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "conv_id": [r[0] for r in rows],
+                    "turn_idx": [0] * len(rows),
+                    "role": ["user"] * len(rows),
+                    "text": [r[1] for r in rows],
+                    "tool": [None] * len(rows),
+                    "ts": pd.to_datetime(["2024-01-01"] * len(rows)),
+                }
+            )
+        )
+
+    def _plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    A = "alpha beta gamma delta kappa lambda"
+    B = "epsilon zeta eta theta sigma omega"
+    # no duplicates in the base: its plain features ARE its contracted
+    # rep rows, so both modes step from the same committed state
+    base = _turns([("a1", A), ("b1", B)])
+    inc = _turns([("c1", A), ("d1", B + " tail")])
+    clusters = spark.createDataFrame(
+        [("a1", "a1"), ("b1", "b1")], "conv_id string, entity_id string"
+    )
+    # composed lazy plans render large: lift the session's 1 MB cap so
+    # the search sees the whole string
+    spark.conf.set("spark.sql.maxPlanStringLength", str(256 * 1024 * 1024))
+    try:
+        plain_batch = build_plan(base, cfg)
+        feats = plain_batch["features"].localCheckpoint(eager=True)
+        step = incremental_link(feats, clusters, inc, cfg, pin=False)
+        plain = [_plan(plain_batch[k]) for k in ("scored", "edges")] + [
+            _plan(step[k])
+            for k in ("features", "new_features", "keys", "scored", "clusters")
+        ]
+        contracted = [
+            _plan(build_plan(base, cfg, contract_dups=True)["edges"]),
+            _plan(
+                incremental_link(
+                    feats, clusters, inc, cfg, contract_dups=True
+                )["dup_assign"]
+            ),
+        ]
+    finally:
+        spark.conf.set("spark.sql.maxPlanStringLength", "1048576")
+        release_caches()
+    for text in plain:
+        assert "xsig1" not in text
+        assert "rep_id" not in text
+    for text in contracted:
+        assert "xsig1" in text
+        assert "rep_id" in text
