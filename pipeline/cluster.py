@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pipeline.session import local_frame
+
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     """Distinct undirected edges as (u > v) orientation, self-loops out."""
@@ -124,6 +126,54 @@ def _driver_union_find(rows: list) -> list[tuple[str, str]]:
     return [(n, find(n)) for n in parent]
 
 
+def _pulled_checksum(h) -> tuple[int, int, int]:
+    """``_checksum`` recomputed on the driver from the pulled per-edge
+    ``xxhash64(u, v)`` values: the same count, the same int64 sum of
+    ``pmod(h, 1e9+7)`` (numpy's ``mod`` takes the divisor's sign, as
+    ``pmod`` does) and the same 64-bit xor, so the metric is bit-equal
+    to the distributed loop's."""
+    import numpy as np
+
+    h = np.asarray(h, dtype=np.int64)
+    s = int(np.mod(h, np.int64(1_000_000_007)).sum(dtype=np.int64))
+    return len(h), s, int(np.bitwise_xor.reduce(h))
+
+
+def _driver_clusters(
+    spark, pulled, all_nodes: DataFrame | None
+) -> tuple[DataFrame, list[dict]]:
+    """The driver fast path over a pulled Arrow table of canonical
+    ``(u, v, h)`` edges: union-find labels as a local relation, plus the
+    singletons of ``all_nodes``, and the one-entry metrics list."""
+    n, s, _ = _pulled_checksum(pulled.column("h").to_numpy())
+    metrics = [
+        {"iteration": 0, "edges": n, "checksum": s,
+         "mode": "driver_union_find"}
+    ]
+    mapping = _driver_union_find(
+        zip(pulled.column("u").to_pylist(), pulled.column("v").to_pylist())
+    )
+    # a plain local-list createDataFrame pickles and converts row-by-row
+    # on the driver (~0.3-1.1s at a few thousand rows, measured round 6)
+    # and plans a Python-worker scan; the Arrow table enters the JVM as a
+    # local relation
+    clusters = local_frame(spark, mapping, "conv_id string, entity_id string")
+    if all_nodes is not None:
+        # broadcast the mapping side explicitly: it is bounded by
+        # 2x driver_threshold rows (it came off the driver), and
+        # without the hint the anti-join plans a shuffle of
+        # all_nodes — the corpus side — on its first AQE pass
+        singletons = (
+            all_nodes.select("conv_id")
+            .join(
+                F.broadcast(clusters.select("conv_id")), "conv_id", "left_anti"
+            )
+            .withColumn("entity_id", F.col("conv_id"))
+        )
+        clusters = clusters.union(singletons)
+    return clusters, metrics
+
+
 def connected_components(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
@@ -135,75 +185,46 @@ def connected_components(
     ``all_nodes`` (single column ``conv_id``) adds singleton nodes that
     appear in no edge.
 
-    Small graphs take a DRIVER union-find fast path: the first checksum
-    action (needed anyway for convergence) yields the distinct edge
-    count; at or below ``driver_threshold`` edges the canonical edge list
-    is collected (200k edges ~ a few MB) and solved in microseconds,
-    skipping the iterative loop whose per-round job overhead dominates
-    small graphs (measured: an incremental step's contracted graph of a
-    few thousand edges cost 4-8s in star-round scheduling alone —
-    round-4 profiling). The INCREMENTAL path's contracted graph is
-    increment-bounded, so production increments live under the threshold
-    by construction; a 100-TB batch run's edge list exceeds it and takes
-    the distributed alternating-star loop. Both paths produce the
-    IDENTICAL labeling (entity_id = min member; pinned by
-    tests/test_cluster.py running every case through both).
-    ``driver_threshold=0`` disables the fast path.
+    Small graphs take a DRIVER union-find fast path in ONE Spark action:
+    one Arrow pull of ``(u, v, xxhash64(u, v))`` over at most
+    ``driver_threshold + 1`` canonical edges. If the pull fits (200k
+    edges ~ a few MB), union-find solves it in microseconds and the
+    ``(edges, checksum)`` metric comes from the pulled hashes
+    (``_pulled_checksum``), skipping the iterative loop whose per-round
+    job overhead dominates small graphs (measured: an incremental step's
+    contracted graph of a few thousand edges cost 4-8s in star-round
+    scheduling alone — round-4 profiling). The INCREMENTAL path's
+    contracted graph is increment-bounded, so production increments live
+    under the threshold by construction; a 100-TB batch run's edge list
+    overflows the pull and takes the distributed alternating-star loop.
+    Both paths produce the IDENTICAL labeling (entity_id = min member;
+    pinned by tests/test_cluster.py running every case through both).
+    ``driver_threshold=0`` disables the fast path (no pull is made).
     """
-    cur = _canonical_edges(edges).localCheckpoint(eager=True)
+    canon = _canonical_edges(edges)
+    if driver_threshold > 0:
+        # Arrow transfer (guide: toPandas/toArrow is orders of magnitude
+        # faster than the row path): a plain collect() pickles up to
+        # driver_threshold Row objects one by one — seconds at the
+        # 200k-edge limit. The limit bounds the pull even when the graph
+        # is corpus-sized; one edge over means "take the loop". The pull
+        # caches the canonical edges, so an overflowing graph does not
+        # evaluate the edge lineage a second time for the loop.
+        canon = canon.persist()
+        pulled = (
+            canon.select("u", "v", F.xxhash64("u", "v").alias("h"))
+            .limit(driver_threshold + 1)
+            .toArrow()
+        )
+        fits = pulled.num_rows <= driver_threshold
+        cur = None if fits else canon.localCheckpoint(eager=True)
+        canon.unpersist()
+        if fits:
+            return _driver_clusters(edges.sparkSession, pulled, all_nodes)
+    else:
+        cur = canon.localCheckpoint(eager=True)
     metrics: list[dict] = []
     prev_sig = _checksum(cur)
-    if driver_threshold > 0 and prev_sig[0] <= driver_threshold:
-        # Arrow transfer for the edge pull (guide: toPandas is orders of
-        # magnitude faster than the row path): a plain collect() pickles
-        # up to driver_threshold Row objects one by one — seconds at the
-        # 200k-edge limit; the Arrow path moves two string columns in
-        # one batch.
-        _pdf = cur.toPandas()
-        mapping = _driver_union_find(
-            list(zip(_pdf["u"].tolist(), _pdf["v"].tolist()))
-        )
-        metrics.append(
-            {
-                "iteration": 0,
-                "edges": prev_sig[0],
-                "checksum": prev_sig[1],
-                "mode": "driver_union_find",
-            }
-        )
-        spark = edges.sparkSession
-        if mapping:
-            # Arrow path: a plain local-list createDataFrame pickles and
-            # converts row-by-row on the driver (~0.3-1.1s at a few
-            # thousand rows, measured round 6); the pandas conversion
-            # rides the Arrow transfer enabled in session config
-            # (~0.05-0.2s for the same rows).
-            import pandas as pd
-
-            clusters = spark.createDataFrame(
-                pd.DataFrame(mapping, columns=["conv_id", "entity_id"]),
-                schema="conv_id string, entity_id string",
-            )
-        else:
-            clusters = cur.select(
-                F.col("u").alias("conv_id"), F.col("v").alias("entity_id")
-            )  # empty frame with the right schema
-        if all_nodes is not None:
-            # broadcast the mapping side explicitly: it is bounded by
-            # 2x driver_threshold rows (it came off the driver), and
-            # without the hint the anti-join plans a shuffle of
-            # all_nodes — the corpus side — on its first AQE pass
-            singletons = (
-                all_nodes.select("conv_id")
-                .join(
-                    F.broadcast(clusters.select("conv_id")),
-                    "conv_id",
-                    "left_anti",
-                )
-                .withColumn("entity_id", F.col("conv_id"))
-            )
-            clusters = clusters.union(singletons)
-        return clusters, metrics
     converged = False
     for it in range(max_iterations):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)

@@ -93,7 +93,18 @@ def increment_tuning(
     cores: 8 partitions 8.3-11.5s vs 32 partitions 11.6-18.8s per step.
     Callers stepping a BACKFILL-sized increment (not the daily cadence
     this context targets) should pass their own value or skip the
-    context. Restored on exit like the AQE flag."""
+    context. Restored on exit like the AQE flag.
+
+    Which session it governs: only ``spark``, the one passed in. On the
+    streaming path ``_link_batch`` passes the outer session, but the
+    plans built from the micro-batch's ``batch_df`` run on the streaming
+    query's cloned session (``batch_df.sparkSession``), so they keep
+    that session's AQE and shuffle partitions — they plan as
+    ``AdaptiveSparkPlan`` — while ``retract_from_state``'s plans, built
+    on ``spark`` itself, do not. This is known and left as it is: one
+    traced ``stream`` benchmark run (4-core VM) with the tuning applied
+    to ``batch_df.sparkSession`` instead raised the micro-batch from
+    446 to 710 tasks and its wall from 9.4 s to 12.9 s."""
     if not enabled:
         yield
         return
@@ -184,7 +195,7 @@ from pipeline.cluster import connected_components
 from pipeline.config import DEFAULT_CONFIG, MatchConfig
 from pipeline.features import featurize
 from pipeline.scoring import score_pairs
-from pipeline.session import track_cache
+from pipeline.session import local_frame, track_cache
 
 # Ceiling on scoped hot-key rows pulled to the driver for the
 # literal-broadcast-leaf star plan (a few MB of narrow rows at this
@@ -315,21 +326,24 @@ def incremental_candidate_pairs(
         # review) — past the limit, keep the hub/star plans DISTRIBUTED
         # (cached lazy frames: the pre-optimization shape, a few extra
         # AQE broadcast jobs instead of a driver OOM).
-        hot_rows = hot_scoped.limit(_DRIVER_HOT_LIMIT + 1).collect()
-        if len(hot_rows) > _DRIVER_HOT_LIMIT:
+        # Both pulls are Arrow tables and re-enter Spark as JVM local
+        # relations (``local_frame``): a row-list createDataFrame would
+        # plan a Python-worker scan that every consuming action re-runs.
+        hot_rows = hot_scoped.limit(_DRIVER_HOT_LIMIT + 1).toArrow()
+        if hot_rows.num_rows > _DRIVER_HOT_LIMIT:
             hot_cached = track_cache(hot_scoped)
             star_hot = F.broadcast(hot_cached)
             star_hubs = F.broadcast(
                 track_cache(_hot_hubs(union_keys, star_hot))
             )
-        elif hot_rows:
+        elif hot_rows.num_rows:
             spark = union_keys.sparkSession
             star_hot = F.broadcast(
-                spark.createDataFrame(hot_rows, hot_scoped.schema)
+                local_frame(spark, hot_rows, hot_scoped.schema)
             )
             hub_plan = _hot_hubs(union_keys, star_hot)
             star_hubs = F.broadcast(
-                spark.createDataFrame(hub_plan.collect(), hub_plan.schema)
+                local_frame(spark, hub_plan.toArrow(), hub_plan.schema)
             )
         else:
             from dataclasses import replace as _replace

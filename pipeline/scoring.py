@@ -190,42 +190,31 @@ def with_decisions(
     if cfg.require_roles:
         gate = gate | (F.length(ra) == 0) | (F.length(rb) == 0)
 
-    out = scored.withColumn("_gated", gate)
-    for c in CHANNELS:
-        out = out.withColumn(
-            f"s_{c}", F.when(F.col("_gated"), F.lit(0.0)).otherwise(F.col(f"s_{c}"))
-        )
-    out = out.withColumn(
-        "confidence",
-        F.when(F.col("_gated"), F.lit(0.0)).otherwise(confidence_col(cfg)),
+    g = F.col("_gated")
+    zero = F.lit(0.0)
+    # One projection per dependency level (``withColumns``): each
+    # ``withColumn`` re-analyzes the whole plan, and this layer used to
+    # chain ~20 of them per score_pairs call. Level 1 reads the UNGATED
+    # s_* for confidence: where ``gate`` holds the result is 0.0 either
+    # way, and elsewhere the gated s_* ARE the ungated ones.
+    out = scored.withColumns(
+        {"_gated": gate}
+        | {
+            f"s_{c}": F.when(gate, zero).otherwise(F.col(f"s_{c}"))
+            for c in CHANNELS
+        }
+        | {"confidence": F.when(gate, zero).otherwise(confidence_col(cfg))}
     )
     out = out.withColumn(
         "tier",
-        F.when(F.col("_gated"), F.lit("none")).otherwise(
-            tier_col(F.col("confidence"))
-        ),
+        F.when(g, F.lit("none")).otherwise(tier_col(F.col("confidence"))),
     )
     adj = adjustment_col(F.col("tier"))
-    out = out.withColumn(
-        "confidence_adjusted", F.greatest(F.lit(0.0), F.col("confidence") + adj)
-    )
 
-    # P5 multi-component exact predicate (optimized.py:191-218)
     s = {c: F.col(f"s_{c}") for c in CHANNELS}
-    out = out.withColumn(
-        "is_exact",
-        (s["text"] >= F.lit(cfg.exact_similarity_min))
-        & (F.col("confidence") >= F.lit(95.0))
-        & ~((s["num"] > 0.0) & (s["num"] < F.lit(cfg.exact_house_min)))
-        & (s["token_sort"] >= F.lit(cfg.exact_street_min))
-        & ~((s["jaccard"] > 0.0) & (s["jaccard"] < F.lit(cfg.exact_zip_min))),
-    )
-    out = out.withColumn("unit_exact", (F.length(ra) > 0) & (ra == rb))
-
     # F16 quality (UAM:760-838): presence bonuses + es/similarity bonuses
     # + level adjustment + preprocessing-issue penalties, clamped [0,100]
     es = F.lit(10.0) * n_families
-    zero = F.lit(0.0)
     base = (
         F.col("confidence")
         + F.when(F.length(nb) > 0, F.lit(20.0)).otherwise(zero)
@@ -250,48 +239,60 @@ def with_decisions(
         (F.length(ra) > 0) & (F.length(rb) > 0),
         F.when(ra == rb, F.lit(50.0)).otherwise(F.lit(-20.0)),
     ).otherwise(zero)
-    out = out.withColumn(
-        "quality",
-        F.when(F.col("_gated"), zero).otherwise(clamped + unit_bonus),
+    out = out.withColumns(
+        {
+            "confidence_adjusted": F.greatest(
+                F.lit(0.0), F.col("confidence") + adj
+            ),
+            # P5 multi-component exact predicate (optimized.py:191-218)
+            "is_exact": (s["text"] >= F.lit(cfg.exact_similarity_min))
+            & (F.col("confidence") >= F.lit(95.0))
+            & ~((s["num"] > 0.0) & (s["num"] < F.lit(cfg.exact_house_min)))
+            & (s["token_sort"] >= F.lit(cfg.exact_street_min))
+            & ~(
+                (s["jaccard"] > 0.0)
+                & (s["jaccard"] < F.lit(cfg.exact_zip_min))
+            ),
+            "unit_exact": (F.length(ra) > 0) & (ra == rb),
+            "quality": F.when(g, zero).otherwise(clamped + unit_bonus),
+        }
     )
-    out = out.withColumn(
-        "reliability",
-        F.when(F.col("_gated"), F.lit("speculative")).otherwise(
-            reliability_col(F.col("quality"))
-        ),
-    )
-    # F17 warnings array (UAM:855-864)
-    out = out.withColumn(
-        "warnings",
-        F.when(
-            F.col("_gated"), F.array(F.lit("empty_critical_feature"))
-        ).otherwise(
-            F.array_compact(
-                F.array(
-                    F.when(
-                        F.col("tier").isin("phonetic", "keyword", "desperate"),
-                        F.lit("low_confidence_level"),
-                    ),
-                    F.when(s["text"] < 50.0, F.lit("low_similarity")),
-                    # STRUCTURALLY UNREACHABLE in this recast, kept for
-                    # F17 parity: the reference's retrieval score is the
-                    # ES rank (UAM:855-864 — can be < 5 for a weak index
-                    # hit), ours is 10 * n_families and a pair exists
-                    # only because >= 1 blocking family proposed it, so
-                    # es >= 10 always. The oracle twin replicates the
-                    # same condition, so both engines agree on the empty
-                    # set; a consumer filtering on this warning gets the
-                    # same (zero) rows the recast semantics imply.
-                    F.when(es < 5.0, F.lit("low_retrieval_score")),
+    out = out.withColumns(
+        {
+            "reliability": F.when(g, F.lit("speculative")).otherwise(
+                reliability_col(F.col("quality"))
+            ),
+            # F17 warnings array (UAM:855-864)
+            "warnings": F.when(
+                g, F.array(F.lit("empty_critical_feature"))
+            ).otherwise(
+                F.array_compact(
+                    F.array(
+                        F.when(
+                            F.col("tier").isin(
+                                "phonetic", "keyword", "desperate"
+                            ),
+                            F.lit("low_confidence_level"),
+                        ),
+                        F.when(s["text"] < 50.0, F.lit("low_similarity")),
+                        # STRUCTURALLY UNREACHABLE in this recast, kept
+                        # for F17 parity: the reference's retrieval score
+                        # is the ES rank (UAM:855-864 — can be < 5 for a
+                        # weak index hit), ours is 10 * n_families and a
+                        # pair exists only because >= 1 blocking family
+                        # proposed it, so es >= 10 always. The oracle
+                        # twin replicates the same condition, so both
+                        # engines agree on the empty set; a consumer
+                        # filtering on this warning gets the same (zero)
+                        # rows the recast semantics imply.
+                        F.when(es < 5.0, F.lit("low_retrieval_score")),
+                    )
                 )
-            )
-        ),
-    )
-    out = out.withColumn(
-        "is_match",
-        ~F.col("_gated")
-        & (F.col("confidence") >= F.lit(cfg.match_tier_threshold))
-        & (s["text"] >= F.lit(cfg.match_text_floor)),
+            ),
+            "is_match": ~g
+            & (F.col("confidence") >= F.lit(cfg.match_tier_threshold))
+            & (s["text"] >= F.lit(cfg.match_text_floor)),
+        }
     )
     return out.drop("_gated")
 

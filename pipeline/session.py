@@ -66,6 +66,35 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, data, schema):
+    """Small driver-side rows -> a DataFrame that plans as a JVM
+    ``LocalTableScan``.
+
+    ``data`` is a list of tuples or a pyarrow Table; ``schema`` a DDL
+    string or StructType. ``spark.createDataFrame(list)`` plans a
+    ``Scan ExistingRDD`` over a PythonRDD, which every action that reads
+    the frame re-runs as a Python-worker stage; a pandas frame only
+    avoids that when non-empty (pyspark routes empty ones back through
+    the row path). An Arrow table always enters the JVM as a local
+    relation, empty or not. List columns are cast to the schema's types,
+    so integer ids become their decimal strings under a string column,
+    as the row path's conversion makes them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(data, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*data)) if data else [()] * len(arrow_schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c).cast(f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(data, schema)
+
+
 # -- scoped cache registry ---------------------------------------------------
 # Operators that persist intermediates (blocking key table, dedup shingle
 # tables) register them here; long-lived sessions (looped bench, notebook,

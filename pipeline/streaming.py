@@ -540,6 +540,8 @@ def _link_batch(
         feats, keys, counts, clusters0 = _load_state(spark, state)
         anchors_dir = state.get("anchors")
         adf = spark.read.parquet(anchors_dir) if anchors_dir else None
+        # tunes ``spark`` only; the plans built from ``batch_df`` run on
+        # the query's cloned session (see increment_tuning's docstring)
         with increment_tuning(spark):
             out = incremental_link(
                 feats, clusters0, batch_df, cfg, anchor_df=adf,
@@ -793,17 +795,13 @@ def retract_from_state(
 
     from pipeline.config import DEFAULT_CONFIG
     from pipeline.incremental import increment_tuning, retract
-    from pipeline.session import release_caches
+    from pipeline.session import local_frame, release_caches
 
     cfg = cfg or DEFAULT_CONFIG
     latest_path = os.path.join(state_dir, "_LATEST.json")
     state = _pointer_read(spark, latest_path)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
-    if not isinstance(remove_ids, DataFrame):
-        remove_ids = spark.createDataFrame(
-            [(str(i),) for i in remove_ids], "conv_id string"
-        )
     contracted = bool(state.get("contracted", False))
     # committed match edges (layouts from the edges_b{n} era): the
     # zero-rescore path — retraction filters the committed edge table to
@@ -824,12 +822,35 @@ def retract_from_state(
     if contracted:
         dups = _load_dups(spark, state)
         if dups is None:
-            dups = spark.createDataFrame(
-                [], "conv_id string, rep_id string, hit boolean"
+            dups = local_frame(
+                spark, [], "conv_id string, rep_id string, hit boolean"
             )
     anchors_dir = state.get("anchors")
     adf = spark.read.parquet(anchors_dir) if anchors_dir else None
     with increment_tuning(spark):
+        # Resolve the request against the committed ids ONCE, in one
+        # collect bounded by the request size (the committed ids it names
+        # plus the request itself). The resolved ids re-enter Spark as a
+        # JVM local relation, so the actions below that read the removal
+        # set run no Python-worker stage, and the never-ingested
+        # remainder is counted here instead of by one more action.
+        if isinstance(remove_ids, DataFrame):
+            requested = remove_ids.select("conv_id").distinct()
+        else:
+            requested = local_frame(
+                spark, [(str(i),) for i in set(remove_ids)], "conv_id string"
+            )
+        rows = (
+            clusters.join(F.broadcast(requested), "conv_id", "semi")
+            .select("conv_id", F.lit(True).alias("hit"))
+            .unionByName(requested.select("conv_id", F.lit(False).alias("hit")))
+            .collect()
+        )
+        matched = {r["conv_id"] for r in rows if r["hit"]}
+        unmatched = {r["conv_id"] for r in rows} - matched
+        remove_ids = local_frame(
+            spark, [(i,) for i in sorted(matched)], "conv_id string"
+        )
         out = retract(
             feats, clusters, remove_ids, cfg, anchor_df=adf,
             match_edges=match_edges,
@@ -842,7 +863,9 @@ def retract_from_state(
         tdir = os.path.join(state_dir, f"tombstones_rev{rev}")
         cdir = os.path.join(state_dir, f"counts_rev{rev}")
         ldir = os.path.join(state_dir, f"clusters_rev{rev}")
-        tomb = out["removed"].select("conv_id")
+        # the resolved ids ARE retract's removal set; the local frame
+        # skips re-resolving them against the committed clusters
+        tomb = remove_ids
         if state.get("tombstones"):
             tomb = tomb.unionByName(
                 spark.read.parquet(state["tombstones"]).select("conv_id")
@@ -885,9 +908,8 @@ def retract_from_state(
         # NOT tombstoned (they would blackhole a future first ingestion)
         # — they are counted into the committed pointer so the no-op is
         # auditable
-        n_unmatched = out["unmatched"].count()
-        if n_unmatched:
-            payload["unmatched_removed"] = n_unmatched
+        if unmatched:
+            payload["unmatched_removed"] = len(unmatched)
         release_caches()
         _pointer_commit(spark, latest_path, payload)
     return payload

@@ -53,9 +53,21 @@ CASES = [
 THRESHOLDS = [200_000, 0]
 
 
-@pytest.mark.parametrize("thr", THRESHOLDS)
+def _n_canonical(edges: list[tuple[str, str]]) -> int:
+    return len({(max(a, b), min(a, b)) for a, b in edges if a != b})
+
+
+# ... and at the driver pull's boundary: a threshold of exactly the
+# case's distinct-edge count stays on the driver, one less overflows the
+# pull into the loop (a threshold that comes out 0 disables the pull)
+@pytest.mark.parametrize("thr", THRESHOLDS + ["at_count", "below_count"])
 @pytest.mark.parametrize("edges,nodes", CASES)
 def test_cc_matches_union_find(spark, edges, nodes, thr):
+    n_edges = _n_canonical(edges)
+    if thr == "at_count":
+        thr = n_edges
+    elif thr == "below_count":
+        thr = max(n_edges - 1, 0)
     e = spark.createDataFrame(
         pd.DataFrame(edges or [("_", "_")], columns=["src", "dst"])
     )
@@ -68,7 +80,29 @@ def test_cc_matches_union_find(spark, edges, nodes, thr):
     }
     assert got == _union_find(edges, nodes)
     took_fast = any(m.get("mode") == "driver_union_find" for m in metrics)
-    assert took_fast == (thr > 0), metrics
+    assert took_fast == (0 < thr and n_edges <= thr), metrics
+
+
+def test_cc_driver_checksum_equals_distributed_checksum(spark):
+    """The driver path's ``(edges, checksum)`` metric, computed from the
+    pulled per-edge hashes, equals ``_checksum`` of the same canonical
+    edges — count, modular sum and xor alike."""
+    import random
+
+    from pipeline.cluster import _canonical_edges, _checksum, _pulled_checksum
+
+    rng = random.Random(23)
+    names = [f"h{i:05d}" for i in range(20_000)]
+    edges = [(rng.choice(names), rng.choice(names)) for _ in range(20_000)]
+    e = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    canon = _canonical_edges(e)
+    want = _checksum(canon)
+    assert want[0] == _n_canonical(edges)
+    hashes = canon.select(F.xxhash64("u", "v").alias("h")).toPandas()["h"]
+    assert _pulled_checksum(hashes.to_numpy()) == want
+    _, metrics = connected_components(e)
+    assert metrics[0]["mode"] == "driver_union_find"
+    assert (metrics[0]["edges"], metrics[0]["checksum"]) == want[:2]
 
 
 @pytest.mark.parametrize("thr", THRESHOLDS)

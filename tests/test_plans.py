@@ -270,6 +270,24 @@ def test_minhash_single_pass_equals_per_hash(spark):
         assert a == b, (impl, a, b)
 
 
+def _turns(spark, rows):
+    """One single-turn conversation per ``(conv_id, text)`` row."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": [r[0] for r in rows],
+                "turn_idx": [0] * len(rows),
+                "role": ["user"] * len(rows),
+                "text": [r[1] for r in rows],
+                "tool": [None] * len(rows),
+                "ts": pd.to_datetime(["2024-01-01"] * len(rows)),
+            }
+        )
+    )
+
+
 def test_plain_mode_builds_no_contraction(spark):
     """Plain mode is the identity contraction: the plans of plain
     ``build_plan`` and plain ``incremental_link`` carry no exact-signature
@@ -278,8 +296,6 @@ def test_plain_mode_builds_no_contraction(spark):
     nothing for it. The contracted plans of the same inputs carry both,
     so the check cannot pass vacuously."""
     from dataclasses import replace
-
-    import pandas as pd
 
     from pipeline.config import DEFAULT_CONFIG
     from pipeline.incremental import incremental_link
@@ -290,20 +306,6 @@ def test_plain_mode_builds_no_contraction(spark):
     # pin=False step renders its plan in every action it runs
     cfg = replace(DEFAULT_CONFIG, anchor_max_df=1, hot_key_star=False)
 
-    def _turns(rows):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "conv_id": [r[0] for r in rows],
-                    "turn_idx": [0] * len(rows),
-                    "role": ["user"] * len(rows),
-                    "text": [r[1] for r in rows],
-                    "tool": [None] * len(rows),
-                    "ts": pd.to_datetime(["2024-01-01"] * len(rows)),
-                }
-            )
-        )
-
     def _plan(df) -> str:
         return df._jdf.queryExecution().optimizedPlan().toString()
 
@@ -311,8 +313,8 @@ def test_plain_mode_builds_no_contraction(spark):
     B = "epsilon zeta eta theta sigma omega"
     # no duplicates in the base: its plain features ARE its contracted
     # rep rows, so both modes step from the same committed state
-    base = _turns([("a1", A), ("b1", B)])
-    inc = _turns([("c1", A), ("d1", B + " tail")])
+    base = _turns(spark, [("a1", A), ("b1", B)])
+    inc = _turns(spark, [("c1", A), ("d1", B + " tail")])
     clusters = spark.createDataFrame(
         [("a1", "a1"), ("b1", "b1")], "conv_id string, entity_id string"
     )
@@ -344,3 +346,99 @@ def test_plain_mode_builds_no_contraction(spark):
     for text in contracted:
         assert "xsig1" in text
         assert "rep_id" in text
+
+
+def _local_only(df) -> str:
+    """The frame's plan, asserting it reads no Python-sourced RDD: a
+    ``Scan ExistingRDD`` leaf re-runs its Python-worker stage in every
+    action that reads the frame."""
+    plan = _formatted_plan(df)
+    assert "ExistingRDD" not in plan, plan[:2000]
+    return plan
+
+
+def test_retract_request_ids_plan_as_local_relation(
+    spark, tmp_path, monkeypatch
+):
+    """``retract_from_state`` resolves the request on the driver and
+    hands ``retract`` the matched ids as a JVM local relation."""
+    from dataclasses import replace
+
+    import pipeline.incremental as incremental_mod
+    from pipeline.config import DEFAULT_CONFIG
+    from pipeline.streaming import _link_batch, retract_from_state
+
+    cfg = replace(DEFAULT_CONFIG, anchor_max_df=1)
+    state = str(tmp_path / "state")
+    _link_batch(
+        spark,
+        _turns(spark, [
+            ("a1", "alpha beta gamma delta kappa lambda"),
+            ("a2", "alpha beta gamma delta kappa lambda"),
+            ("b1", "epsilon zeta eta theta sigma omega"),
+        ]),
+        0, state, cfg,
+    )
+
+    class _Captured(Exception):
+        pass
+
+    seen = {}
+
+    def capture(existing_feats, existing_clusters, remove_ids, *a, **kw):
+        seen["ids"] = remove_ids
+        raise _Captured
+
+    monkeypatch.setattr(incremental_mod, "retract", capture)
+    with pytest.raises(_Captured):
+        retract_from_state(spark, state, ["a2", "never_ingested"], cfg=cfg)
+    _local_only(seen["ids"])
+    assert [r["conv_id"] for r in seen["ids"].collect()] == ["a2"]
+
+
+def test_hot_key_leaves_plan_as_local_relations(spark, monkeypatch):
+    """With a non-empty hot list, the hot-key and hub tables
+    ``incremental_candidate_pairs`` pulls to the driver re-enter Spark as
+    JVM local relations."""
+    from dataclasses import replace
+
+    import pipeline.blocking as blocking_mod
+    import pipeline.incremental as incremental_mod
+    from pipeline.canonicalize import canonicalize
+    from pipeline.config import DEFAULT_CONFIG
+    from pipeline.features import featurize
+    from pipeline.session import release_caches
+
+    cfg = replace(
+        DEFAULT_CONFIG, block_key_cap=4, anchor_max_df=1, hot_key_star=True
+    )
+    boiler = "please reset my password for the billing portal"
+    rows = [(f"m{i:02d}", boiler) for i in range(12)]
+    rows += [(f"o{i:02d}", f"unrelated text number {i} x{i}y") for i in range(4)]
+    feats = featurize(canonicalize(_turns(spark, rows)), cfg)
+    new_ids = spark.createDataFrame(
+        [(f"m{i:02d}",) for i in range(6)], "conv_id string"
+    )
+    seen = {}
+    cap_members = incremental_mod._cap_members
+    star_pairs = blocking_mod.hot_star_pairs
+
+    def cap_spy(*a, hubs=None, **kw):
+        seen.setdefault("hubs", hubs)
+        return cap_members(*a, hubs=hubs, **kw)
+
+    def star_spy(*a, hot=None, **kw):
+        seen["hot"] = hot
+        return star_pairs(*a, hot=hot, **kw)
+
+    monkeypatch.setattr(incremental_mod, "_cap_members", cap_spy)
+    monkeypatch.setattr(blocking_mod, "hot_star_pairs", star_spy)
+    try:
+        incremental_mod.incremental_candidate_pairs(feats, new_ids, cfg)
+    finally:
+        release_caches()
+    assert seen.get("hubs") is not None and seen.get("hot") is not None, (
+        "the increment's hot list came out empty; the check would be vacuous"
+    )
+    _local_only(seen["hot"])
+    _local_only(seen["hubs"])
