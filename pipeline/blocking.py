@@ -174,8 +174,9 @@ def _cap_members(
     """The ONE member-cap rule: down-sample keys whose member count
     exceeds ``block_key_cap`` with the deterministic engine-neutral coin,
     audit the hot keys. Shared by the batch path (``capped_key_table``)
-    and the committed-state path (``capped_key_table_from_state``) so the
-    cap rule cannot drift between them."""
+    and the committed-state path
+    (``incremental.incremental_candidate_pairs``) so the cap rule cannot
+    drift between them."""
     from pipeline.session import track_cache
 
     # cache the (tiny — over-cap keys only) hot list: it feeds BOTH the
@@ -310,8 +311,9 @@ def key_table_with_counts(
     key table (family, key, conv_id) and its per-key member counts
     (family, key, members). A batch run commits both next to the
     features stage (bucketed by key — the count merge below is then
-    co-partitioned); ``capped_key_table_from_state`` consumes them so an
-    increment never re-explodes or re-counts the corpus."""
+    co-partitioned); ``incremental.incremental_candidate_pairs``
+    consumes them so an increment never re-explodes or re-counts the
+    corpus."""
     keys = _key_table(feats, cfg, anchor_df)
     counts = keys.groupBy("family", "key").agg(
         F.count(F.lit(1)).alias("members")
@@ -348,53 +350,6 @@ def merge_key_state(
         .agg(F.sum("members").alias("members"))
     )
     return keys, counts
-
-
-def require_anchor_snapshot(cfg: MatchConfig, anchor_df, context: str) -> None:
-    """THE anchor-snapshot precondition, single-sourced (round-5 review:
-    three hand-maintained copies of the same condition + message). Any
-    path that derives blocking keys for a POPULATION SLICE (increment,
-    retraction survivors, committed-state merge) must block against the
-    committed (token, df) snapshot — df computed over the slice alone
-    mints bogus "rare" anchors for corpus-common tokens."""
-    if cfg.anchor_max_df >= 2 and anchor_df is None:
-        raise ValueError(
-            f"{context} with anchors enabled (anchor_max_df >= 2) "
-            "requires the committed (token, df) snapshot as anchor_df "
-            "(blocking.token_df); pass the snapshot the committed keys "
-            "were built with, or disable the family (anchor_max_df < 2)"
-        )
-
-def capped_key_table_from_state(
-    existing_keys: DataFrame,
-    existing_counts: DataFrame,
-    new_feats: DataFrame,
-    cfg: MatchConfig = DEFAULT_CONFIG,
-    anchor_df: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """``capped_key_table`` over (committed state ∪ increment) WITHOUT
-    touching the corpus: keys(new) come from ``new_feats`` alone, and
-    union member counts are committed counts + increment counts
-    (``merge_key_state``). Output is EXACTLY what
-    ``capped_key_table(union_feats, ...)`` returns, INCLUDING when hot
-    keys bind: the coin depends only on (conv_id, key), the merged
-    members equal the union count, and both paths share the literal
-    ``_cap_members`` rule (pinned by
-    ``tests/test_incremental.py::test_committed_key_state_matches_union``).
-
-    Scale shape: the only corpus-sized inputs are streamed — the
-    committed key table (map-side coin filter against a broadcast hot
-    list) and the committed counts (narrow (family, key, members) rows,
-    co-partitioned merge on bucketed storage)."""
-    # increment-local df would mint bogus "rare" anchors for
-    # corpus-common tokens and merge them into the committed counts —
-    # see incremental.incremental_candidate_pairs for the full story
-    require_anchor_snapshot(cfg, anchor_df, "committed-state mode")
-    new_keys, new_counts = key_table_with_counts(new_feats, cfg, anchor_df)
-    keys, counts = merge_key_state(
-        existing_keys, existing_counts, new_keys, new_counts
-    )
-    return _cap_members(keys, counts, cfg)
 
 
 def cap_hot_buckets(

@@ -11,9 +11,11 @@ components to their entity label before clustering.
 Algorithm (all lazy DataFrame composition):
 
 1. featurize the new turns; union with the committed features table.
-2. capped key table over the UNION (same member caps as batch); candidate
-   pairs = NEW-side keys equi-joined against the full key table. The big
-   key table is streamed ONCE against the (broadcast-able) new-key table,
+2. capped key table over the UNION (same member caps as batch), built
+   from the committed key table + member counts and the increment's own
+   keys — the corpus is never re-exploded; candidate pairs = NEW-side
+   keys equi-joined against the full key table. The big key table is
+   streamed ONCE against the broadcast new-key table,
    so join cost scales with the increment, not corpus²: no corpus
    self-join anywhere. Pair dedup + the same star-preserving per-key pair
    cap as the batch path (``blocking.star_capped_pairs``).
@@ -182,13 +184,12 @@ def materialize_state(out: dict, keys: tuple = (
 
 
 from pipeline.blocking import (
-    require_anchor_snapshot,
     _cap_members,
     _hot_hubs,
-    candidate_pairs,
     key_table_with_counts,
     merge_key_state,
     star_capped_pairs,
+    token_df,
 )
 from pipeline.canonicalize import canonicalize
 from pipeline.cluster import connected_components
@@ -205,29 +206,28 @@ _DRIVER_HOT_LIMIT = 200_000
 
 
 def incremental_candidate_pairs(
-    feats_all: DataFrame,
-    new_ids: DataFrame,
+    new_feats: DataFrame,
+    existing_keys: DataFrame,
+    existing_counts: DataFrame,
     cfg: MatchConfig = DEFAULT_CONFIG,
-    broadcast_new: bool = True,
     anchor_df: DataFrame | None = None,
-    existing_keys: DataFrame | None = None,
-    existing_counts: DataFrame | None = None,
-    new_feats: DataFrame | None = None,
 ):
     """Candidate pairs restricted to those touching >= 1 new doc.
 
-    ``feats_all``: features for existing ∪ new docs (the key table must
-    see the union so member caps match a batch run). ``new_ids``: one
-    column ``conv_id``. ``anchor_df``: the committed (token, df)
-    snapshot (``blocking.token_df``) that pins the anchor family —
-    see ``incremental_link``. Returns (pairs, hot_key_audit,
-    pair_cap_audit, cap_risk_audit, union_keys, union_counts,
-    new_keys_uncapped) — union_keys/union_counts are the NEXT run's
-    committed blocking state, produced at zero extra compute;
-    new_keys_uncapped is the increment's own pre-cap key table (the
-    ``nk`` already built in committed-state mode — what an append-only
-    state commit writes per batch; None in the no-committed-keys
-    fallback, where no separate increment table exists).
+    ``new_feats``: the increment's feature rows. ``existing_keys`` /
+    ``existing_counts``: the committed blocking state
+    (``blocking.key_table_with_counts`` over the committed features) —
+    the union key table is committed-state ∪ increment-keys and member
+    counts are merged narrow aggregates, so the corpus is never
+    re-exploded or re-counted, and member caps still see the union
+    population exactly as a batch run does. ``anchor_df``: the
+    committed (token, df) snapshot (``blocking.token_df``) that pins the
+    anchor family — see ``incremental_link``. Returns (pairs,
+    hot_key_audit, pair_cap_audit, cap_risk_audit, union_keys,
+    union_counts, new_keys_uncapped) — union_keys/union_counts are the
+    NEXT run's committed blocking state, produced at zero extra compute;
+    new_keys_uncapped is the increment's own pre-cap key table (what an
+    append-only state commit writes per batch).
 
     ``cap_risk_audit``: keys whose FULL pair population C(members, 2)
     exceeds ``pairs_per_key_cap``. The restricted ``pair_cap_audit`` can
@@ -237,42 +237,28 @@ def incremental_candidate_pairs(
     it is empty, no per-key pair cap can bind in the batch, base OR
     incremental ranking (members only grow base -> union).
 
-    With ``existing_keys`` + ``existing_counts`` (the committed blocking
-    state from ``blocking.key_table_with_counts``) and ``new_feats``,
-    the union key table is committed-state ∪ increment-keys and member
-    counts are merged narrow aggregates — the corpus is never
-    re-exploded or re-counted.
-
-    Scale shape: keys(new) ⋈ keys(all) — with a small increment the new
-    side broadcasts and the corpus key table streams through map-side,
-    no shuffle of the big side and never a corpus self-join. A new-new
-    pair appears from both sides of the join; the least/greatest
-    normalization + the group-by inside ``star_capped_pairs`` dedups it.
+    Scale shape: keys(new) ⋈ keys(all) — the increment side broadcasts
+    and the corpus key table streams through map-side, no shuffle of the
+    big side and never a corpus self-join. A new-new pair appears from
+    both sides of the join; the least/greatest normalization + the
+    group-by inside ``star_capped_pairs`` dedups it.
     """
-    if existing_keys is not None:
-        if existing_counts is None or new_feats is None:
-            raise ValueError(
-                "committed-state mode needs existing_keys, "
-                "existing_counts AND new_feats together"
-            )
-        # Without the committed (token, df) snapshot, the anchor
-        # family's df would be computed over the INCREMENT alone — a
-        # corpus-common token appearing 2..anchor_max_df times in a
-        # small increment would mint a bogus "rare" anchor, and
-        # merge_key_state would fold those keys into the committed
-        # counts permanently. The fallback path (no existing_keys)
-        # computes df over the full union instead, so the two paths
-        # would silently diverge. Fail loudly.
-        require_anchor_snapshot(cfg, anchor_df, "committed-state mode")
-        nk, nc = key_table_with_counts(new_feats, cfg, anchor_df)
-        union_keys, union_counts = merge_key_state(
-            existing_keys, existing_counts, nk, nc
+    # Without the committed (token, df) snapshot, the anchor family's df
+    # would be computed over the INCREMENT alone — a corpus-common token
+    # appearing 2..anchor_max_df times in a small increment would mint a
+    # bogus "rare" anchor, and merge_key_state would fold those keys
+    # into the committed counts permanently. Fail loudly.
+    if cfg.anchor_max_df >= 2 and anchor_df is None:
+        raise ValueError(
+            "committed-state mode with anchors enabled (anchor_max_df >= 2) "
+            "requires the committed (token, df) snapshot as anchor_df "
+            "(blocking.token_df); pass the snapshot the committed keys "
+            "were built with, or disable the family (anchor_max_df < 2)"
         )
-    else:
-        nk = None
-        union_keys, union_counts = key_table_with_counts(
-            feats_all, cfg, anchor_df
-        )
+    nk, nc = key_table_with_counts(new_feats, cfg, anchor_df)
+    union_keys, union_counts = merge_key_state(
+        existing_keys, existing_counts, nk, nc
+    )
     # Star machinery, increment-scoped and DRIVER-PINNED (round-5
     # profiling: the lazy hub/star subtrees re-executed as AQE broadcast
     # jobs in every consuming action — 131 sub-1.5s jobs, the step wall
@@ -287,35 +273,20 @@ def incremental_candidate_pairs(
     star_hot = star_hubs = None
     eff_cfg = cfg
     if cfg.hot_key_star:
-        if existing_keys is not None:
-            scope = nk.select("family", "key").distinct()
-        else:
-            scope = (
-                union_keys.join(
-                    F.broadcast(new_ids.select("conv_id")), "conv_id"
-                )
-                .select("family", "key")
-                .distinct()
-            )
-        if existing_keys is not None:
-            # increment-proportional: union members for the increment's
-            # keys = committed count + increment count, via ONE narrow
-            # semi-scan of the committed counts — never the full union
-            # merge shuffle (that merge still happens lazily for the
-            # returned committed state, but not inside this eager
-            # collect)
-            scoped_counts = (
-                existing_counts.join(
-                    F.broadcast(scope), ["family", "key"], "semi"
-                )
-                .unionByName(nc)  # nc is increment-only: already scoped
-                .groupBy("family", "key")
-                .agg(F.sum("members").alias("members"))
-            )
-        else:
-            scoped_counts = union_counts.join(
+        scope = nk.select("family", "key").distinct()
+        # increment-proportional: union members for the increment's
+        # keys = committed count + increment count, via ONE narrow
+        # semi-scan of the committed counts — never the full union
+        # merge shuffle (that merge still happens lazily for the
+        # returned committed state, but not inside this eager collect)
+        scoped_counts = (
+            existing_counts.join(
                 F.broadcast(scope), ["family", "key"], "semi"
             )
+            .unionByName(nc)  # nc is increment-only: already scoped
+            .groupBy("family", "key")
+            .agg(F.sum("members").alias("members"))
+        )
         hot_scoped = scoped_counts.filter(
             F.col("members") > cfg.block_key_cap
         ).select("family", "key", "members")
@@ -355,8 +326,8 @@ def incremental_candidate_pairs(
     # Do NOT cache `kept`: it is CORPUS-sized (at 100 TB it cannot be
     # cached, and in-sandbox profiling showed the per-step cache fill
     # dominating). It is a cheap map-side coin filter over the committed
-    # key table, streamed twice (once to derive new_keys, once as the
-    # join's b-side); the INCREMENT-sized new_keys is what gets cached.
+    # key table, streamed once as the join's b-side; the INCREMENT-sized
+    # new_keys is what gets cached.
 
     # conservative cross-run pair-cap risk (see docstring): derived from
     # the counts table — a filter on an already-aggregated narrow frame,
@@ -374,23 +345,12 @@ def incremental_candidate_pairs(
         .withColumn("potential_pairs", _pot.cast("long"))
     )
 
-    if existing_keys is not None:
-        # committed-state fast path: the cap rule is per-row
-        # (coin(conv_id, key) vs the UNION member count), so capping the
-        # increment's own key table ``nk`` against the union counts is
-        # EXACTLY kept ∩ new_ids — without re-streaming the committed
-        # key table a second time per step (round-5 fixed-cost cut; the
-        # b-side below still streams it once)
-        new_kept, _ = _cap_members(
-            nk, union_counts, eff_cfg, hubs=star_hubs
-        )
-        new_keys = track_cache(new_kept)
-    else:
-        new_keys = track_cache(
-            kept.join(F.broadcast(new_ids.select("conv_id")), "conv_id")
-        )
-    if broadcast_new:
-        new_keys = F.broadcast(new_keys)
+    # the cap rule is per-row (coin(conv_id, key) vs the UNION member
+    # count), so capping the increment's own key table ``nk`` against
+    # the union counts is EXACTLY kept ∩ new_ids — without streaming the
+    # committed key table a second time per step
+    new_kept, _ = _cap_members(nk, union_counts, eff_cfg, hubs=star_hubs)
+    new_keys = F.broadcast(track_cache(new_kept))
     raw = (
         new_keys.alias("a")
         .join(kept.alias("b"), ["family", "key"])
@@ -418,7 +378,7 @@ def incremental_candidate_pairs(
             union_keys, union_counts, cfg, hot=star_hot, hubs=star_hubs
         )
         nid = F.broadcast(
-            new_ids.select(F.col("conv_id").alias("_nid"))
+            new_feats.select(F.col("conv_id").alias("_nid"))
         )
         star = star.join(
             nid,
@@ -545,7 +505,6 @@ def incremental_link(
     existing_clusters: DataFrame,
     new_turns: DataFrame,
     cfg: MatchConfig = DEFAULT_CONFIG,
-    broadcast_new: bool = True,
     anchor_df: DataFrame | None = None,
     existing_keys: DataFrame | None = None,
     existing_key_counts: DataFrame | None = None,
@@ -566,13 +525,16 @@ def incremental_link(
     to see the scoring stage's join strategy in the returned frames).
 
     ``existing_keys`` / ``existing_key_counts``: the committed blocking
-    state (``blocking.key_table_with_counts`` from the base run) — with
-    them the step never re-explodes or re-counts the corpus key table
-    (its output is bit-identical either way, hot caps included, PROVIDED
-    anchors are pinned via ``anchor_df`` or disabled — enforced: the
-    committed-state path raises when anchors are enabled with no
+    state (``blocking.key_table_with_counts`` from the base run) — the
+    step never re-explodes or re-counts the corpus key table. Anchors
+    must be pinned via ``anchor_df`` or disabled — enforced: a step
+    given committed keys raises when anchors are enabled with no
     snapshot, because increment-local document frequencies would mint
-    bogus rare anchors and corrupt the committed counts).
+    bogus rare anchors and corrupt the committed counts. Without them
+    the step derives the committed state once from ``existing_feats``
+    (``key_table_with_counts``), and an absent ``anchor_df`` defaults to
+    ``token_df`` over existing ∪ increment — the live-population
+    statistics a batch run over the union blocks against.
 
     ``anchor_df``: the committed (token, df) snapshot
     (``blocking.token_df``) — with it, the anchor family is computed
@@ -703,10 +665,19 @@ def incremental_link(
 
     # --- standard incremental machinery over (rep) state --------------
     feats_all = existing_feats.unionByName(rep_feats)
+    if (existing_keys is None) != (existing_key_counts is None):
+        raise ValueError(
+            "pass existing_keys and existing_key_counts together"
+        )
+    if existing_keys is None:
+        if anchor_df is None:
+            anchor_df = token_df(feats_all, cfg)
+        existing_keys, existing_key_counts = key_table_with_counts(
+            existing_feats, cfg, anchor_df
+        )
     pairs, hot_audit, pair_audit, cap_risk, union_keys, union_counts, nk = (
         incremental_candidate_pairs(
-            feats_all, rep_feats.select("conv_id"), cfg, broadcast_new,
-            anchor_df, existing_keys, existing_key_counts, rep_feats,
+            rep_feats, existing_keys, existing_key_counts, cfg, anchor_df
         )
     )
     scored = _score_increment_pairs(feats_all, pairs, cfg, pin)
@@ -728,10 +699,9 @@ def incremental_link(
     out = {
         "features": feats_all,
         "new_features": rep_feats,
-        # the increment's own pre-cap (rep) key rows (committed-state
-        # mode) — what an append-only state commit writes per batch
-        # without re-exploding the increment or re-joining the anchor
-        # snapshot (None when no committed keys were given)
+        # the increment's own pre-cap (rep) key rows — what an
+        # append-only state commit writes per batch without re-exploding
+        # the increment or re-joining the anchor snapshot
         "new_keys": nk,
         "keys": union_keys,
         "key_counts": union_counts,
@@ -773,22 +743,15 @@ def _reissue(df: DataFrame, promotions: DataFrame) -> DataFrame:
     )
 
 
-_CONTRACTED_NEEDS_EDGES = (
-    "contracted retraction requires the committed match-edge table: "
-    "rep-only features cannot re-score collapsed members, so there is "
-    "no re-scoring fallback in contracted mode"
-)
-
-
 def retract(
     existing_feats: DataFrame,
     existing_clusters: DataFrame,
     remove_ids: DataFrame,
     cfg: MatchConfig = DEFAULT_CONFIG,
-    match_edges: DataFrame | None = None,
+    *,
+    match_edges: DataFrame,
     existing_keys: DataFrame | None = None,
     existing_key_counts: DataFrame | None = None,
-    anchor_df: DataFrame | None = None,
     dup_map: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """DECREMENTAL entity resolution: delete conversations from committed
@@ -812,15 +775,11 @@ def retract(
        (broadcast semi-join; deletion requests are small by nature).
     2. members of those entities; survivors = members minus removed.
     3. the surviving match subgraph inside affected entities:
-       - ``match_edges`` given (the committed edge table a production
-         deployment appends per step — match pairs only, a tiny fraction
-         of pair volume): filter to edges with both endpoints surviving.
-         ZERO re-scoring, the 100-TB path.
-       - else: re-block + re-score survivors of affected entities only
-         (``candidate_pairs`` over the survivor feature slice). Anchors
-         must be pinned via ``anchor_df`` for population independence,
-         exactly as in ``incremental_link`` (enforced: ValueError when
-         anchors are enabled and no snapshot is given).
+       ``match_edges`` (the committed ``(src, dst)`` edge table a
+       production deployment appends per step — match pairs only, a tiny
+       fraction of pair volume) filtered to edges with both endpoints
+       surviving. ZERO re-scoring and no re-blocking, so no anchor
+       statistics are needed.
     4. connected components over that subgraph (+ survivor singletons) —
        affected components are entity-bounded, so the driver union-find
        fast path almost always takes it; relabel = union of untouched
@@ -838,8 +797,7 @@ def retract(
     edge can only target a member of its old entity — a cross-entity
     match would have merged the entities). Min-id labels fall out of CC
     over survivors. Pinned by ``tests/test_retract.py`` (bridge split,
-    min-label handoff, synth equality, both edge-recovery modes, chain
-    with ``incremental_link``).
+    min-label handoff, synth equality, chain with ``incremental_link``).
 
     ``dup_map`` given: the state is CONTRACTED (rep-only features; one
     feature/key row per exact-duplicate signature class,
@@ -871,15 +829,11 @@ def retract(
     endpoint rewriting unchanged in truth value, and each class's star
     re-centers on the new class minimum — so repaired labels equal
     ``build_plan(contract_dups=True)`` + CC over the remaining turns
-    (pinned by ``tests/test_retract_contracted.py``). ``match_edges`` is
-    REQUIRED in this mode: rep-only features cannot re-score collapsed
-    members (they have no feature rows), so the re-scoring fallback is
-    plain-only — committed match edges are part of the contracted
-    state's contract (``streaming._link_batch`` commits them every
-    batch). One documented approximation: a promoted feature row
-    inherits the retracted rep's non-signature provenance columns
-    (``n_turns`` is signature-determined, ``first_ts`` is not) — the
-    class's first-seen timestamp, not the promoted member's own. No
+    (pinned by ``tests/test_retract_contracted.py``). One documented
+    approximation: a promoted feature row inherits the retracted rep's
+    non-signature provenance columns (``n_turns`` is
+    signature-determined, ``first_ts`` is not) — the class's first-seen
+    timestamp, not the promoted member's own. No
     blocking key, score channel, signature hash or cluster label reads
     that column, so linkage behavior is bit-identical; a fresh rebuild
     from raw turns would carry the member's own timestamp.
@@ -890,9 +844,8 @@ def retract(
     state these are the tombstone semantics
     ``pipeline.streaming.retract_from_state`` implements), ``clusters``
     (repaired labels over remaining docs), ``match_edges`` (surviving,
-    endpoint-patched committed edges, when given), ``removed`` (the
-    resolved removal set), ``unmatched``, ``rescored`` (the affected
-    re-scored pairs when ``match_edges`` was absent), ``cc_metrics``.
+    endpoint-patched committed edges), ``removed`` (the resolved removal
+    set), ``unmatched``, ``cc_metrics``.
     With ``dup_map`` also: ``promoted_features`` / ``promoted_keys`` /
     ``promoted_edges`` / ``promoted_dups`` — the promotion DELTAS alone
     (what an append-only + tombstone state layout commits); ``dup_map``
@@ -900,19 +853,6 @@ def retract(
     layout's ``hit`` flag, pass through); ``promotions`` — (old,
     new_rep) promotion pairs.
     """
-    if match_edges is None:
-        if dup_map is not None:
-            raise ValueError(_CONTRACTED_NEEDS_EDGES)
-        # Same hazard the committed-state paths fail loudly on: the
-        # re-scoring mode re-blocks survivors, and without the committed
-        # (token, df) snapshot the anchor family's df would be computed
-        # over the affected-entity SURVIVOR SLICE alone — corpus-common
-        # tokens look rare, bogus anchor keys mint extra candidate
-        # pairs, and two affected entities the equality theorem keeps
-        # separate can silently merge. Fail before any plan is built.
-        require_anchor_snapshot(
-            cfg, anchor_df, "retract() without match_edges (re-blocks survivors)"
-        )
     # RESOLVE the request against committed membership: clusters cover
     # every committed doc, so ids never ingested drop out of ``removed``.
     # Without this, an unknown id (takedown racing ahead of ingestion, or
@@ -1004,37 +944,26 @@ def retract(
             .where(F.col("src") != F.col("dst"))
         )
 
-    if match_edges is not None:
-        # rewritten endpoints are survivors by construction, so the
-        # both-endpoint anti-joins only ever drop edges touching
-        # removed-and-not-promoted ids
-        kept_edges = match_edges.join(
-            removed.select(F.col("conv_id").alias("src")), "src", "left_anti"
-        ).join(
-            removed.select(F.col("conv_id").alias("dst")), "dst", "left_anti"
+    # rewritten endpoints are survivors by construction, so the
+    # both-endpoint anti-joins only ever drop edges touching
+    # removed-and-not-promoted ids
+    kept_edges = match_edges.join(
+        removed.select(F.col("conv_id").alias("src")), "src", "left_anti"
+    ).join(
+        removed.select(F.col("conv_id").alias("dst")), "dst", "left_anti"
+    )
+    if promotions is not None:
+        out["promoted_edges"] = kept_edges.where("_patched").select(
+            "src", "dst"
         )
-        if promotions is not None:
-            out["promoted_edges"] = kept_edges.where("_patched").select(
-                "src", "dst"
-            )
-            kept_edges = kept_edges.select("src", "dst")
-        out["match_edges"] = kept_edges
-        # committed edges are entity-internal (and promotion stays inside
-        # the entity: new_rep was a member of old_rep's entity), so a
-        # src-side semi-join selects exactly the affected subgraph
-        sub_edges = kept_edges.join(
-            members.select(F.col("conv_id").alias("src")), "src", "semi"
-        )
-    else:
-        surv_feats = track_cache(
-            existing_feats.join(survivor_ids, "conv_id", "semi")
-        )
-        pairs, _ = candidate_pairs(surv_feats, cfg, anchor_df=anchor_df)
-        rescored = score_pairs(surv_feats, pairs, cfg, match_only=True)
-        out["rescored"] = rescored
-        sub_edges = rescored.select(
-            F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-        )
+        kept_edges = kept_edges.select("src", "dst")
+    out["match_edges"] = kept_edges
+    # committed edges are entity-internal (and promotion stays inside
+    # the entity: new_rep was a member of old_rep's entity), so a
+    # src-side semi-join selects exactly the affected subgraph
+    sub_edges = kept_edges.join(
+        members.select(F.col("conv_id").alias("src")), "src", "semi"
+    )
 
     repaired, cc_metrics = connected_components(
         sub_edges, all_nodes=survivor_ids
@@ -1086,12 +1015,9 @@ def retract(
 def retract_contracted(
     existing_rep_feats: DataFrame, existing_clusters: DataFrame,
     dup_map: DataFrame, remove_ids: DataFrame,
-    cfg: MatchConfig = DEFAULT_CONFIG, match_edges: DataFrame | None = None,
-    **kw,
+    cfg: MatchConfig = DEFAULT_CONFIG, *, match_edges: DataFrame, **kw,
 ) -> dict[str, DataFrame]:
     """``retract`` in contraction mode, under the rep-state key name."""
-    if match_edges is None:
-        raise ValueError(_CONTRACTED_NEEDS_EDGES)
     out = retract(existing_rep_feats, existing_clusters, remove_ids, cfg,
                   match_edges=match_edges, dup_map=dup_map, **kw)
     out["rep_features"] = out.pop("features")

@@ -330,6 +330,43 @@ def _pointer_commit(spark: SparkSession, path_str: str, payload: dict) -> None:
     fc.rename(tmp, hpath, opts)
 
 
+def _committed_pointer(spark: SparkSession, state_dir: str):
+    """The committed pointer under ``state_dir`` (None before the first
+    commit), checked against the one state layout every writer here
+    produces: ``edge_dirs`` (the committed match graph retraction
+    repairs from) and ``anchors`` (the frozen (token, df) snapshot every
+    increment blocks against), plus ``dup_dirs`` in a contracted state
+    (the class table representative promotion and the exact-dup
+    short-circuit read). A pointer missing one cannot be stepped or
+    retracted without silently wrong labels, so it fails here — before
+    any state dir is written."""
+    import os
+
+    state = _pointer_read(spark, os.path.join(state_dir, "_LATEST.json"))
+    if state is None:
+        return None
+    required = ["edge_dirs", "anchors"]
+    if state.get("contracted"):
+        required.append("dup_dirs")
+    missing = [k for k in required if not state.get(k)]
+    if missing:
+        raise ValueError(
+            f"state at {state_dir} has no {', '.join(missing)} in its "
+            "committed pointer; rebuild the state (a fresh bootstrap "
+            "commits the complete layout)"
+        )
+    return state
+
+
+def _tombstone_ids(spark: SparkSession, state: dict):
+    """The state's retracted ids as a broadcast ``conv_id`` frame, or None
+    when nothing was retracted since the last compaction."""
+    tomb = state.get("tombstones")
+    if not tomb:
+        return None
+    return F.broadcast(spark.read.parquet(tomb).select("conv_id"))
+
+
 def _load_state(spark: SparkSession, state: dict):
     """Committed pointer dict -> (features, keys, counts, clusters)
     DataFrames, with tombstones applied.
@@ -343,9 +380,8 @@ def _load_state(spark: SparkSession, state: dict):
     broadcast."""
     feats = spark.read.parquet(*state["feature_dirs"])
     keys = spark.read.parquet(*state["key_dirs"])
-    tomb = state.get("tombstones")
-    if tomb:
-        tdf = F.broadcast(spark.read.parquet(tomb).select("conv_id"))
+    tdf = _tombstone_ids(spark, state)
+    if tdf is not None:
         feats = feats.join(tdf, "conv_id", "left_anti")
         keys = keys.join(tdf, "conv_id", "left_anti")
     counts = spark.read.parquet(state["counts"])
@@ -355,16 +391,11 @@ def _load_state(spark: SparkSession, state: dict):
 
 def _load_edges(spark: SparkSession, state: dict):
     """Committed pointer dict -> the union (src, dst) match-edge table
-    with tombstones applied to BOTH endpoints, or None for states
-    committed before edges were part of the layout. Same append-only +
+    with tombstones applied to BOTH endpoints. Same append-only +
     logical-delete contract as features/keys."""
-    dirs = state.get("edge_dirs")
-    if not dirs:
-        return None
-    edges = spark.read.parquet(*dirs)
-    tomb = state.get("tombstones")
-    if tomb:
-        tdf = F.broadcast(spark.read.parquet(tomb).select("conv_id"))
+    edges = spark.read.parquet(*state["edge_dirs"])
+    tdf = _tombstone_ids(spark, state)
+    if tdf is not None:
         edges = edges.join(
             tdf.withColumnRenamed("conv_id", "src"), "src", "left_anti"
         ).join(tdf.withColumnRenamed("conv_id", "dst"), "dst", "left_anti")
@@ -374,18 +405,13 @@ def _load_edges(spark: SparkSession, state: dict):
 def _load_dups(spark: SparkSession, state: dict):
     """Committed pointer dict -> the union ``(conv_id, rep_id, hit)``
     collapsed-member table (contracted states), tombstone-filtered on
-    BOTH columns, or None when the state has no dup dirs. The ``rep_id``
-    filter is what makes representative promotion read-consistent: a
-    promoted class's superseded rows point at the tombstoned old rep and
-    vanish at load, leaving only the re-pointed rows the promotion
-    appended (``retract_from_state``)."""
-    dirs = state.get("dup_dirs")
-    if not dirs:
-        return None
-    dups = spark.read.parquet(*dirs)
-    tomb = state.get("tombstones")
-    if tomb:
-        tdf = F.broadcast(spark.read.parquet(tomb).select("conv_id"))
+    BOTH columns. The ``rep_id`` filter is what makes representative
+    promotion read-consistent: a promoted class's superseded rows point
+    at the tombstoned old rep and vanish at load, leaving only the
+    re-pointed rows the promotion appended (``retract_from_state``)."""
+    dups = spark.read.parquet(*state["dup_dirs"])
+    tdf = _tombstone_ids(spark, state)
+    if tdf is not None:
         dups = dups.join(tdf, "conv_id", "left_anti").join(
             tdf.withColumnRenamed("conv_id", "rep_id"), "rep_id", "left_anti"
         )
@@ -421,7 +447,7 @@ def _link_batch(
     if batch_df.isEmpty():
         return
     latest_path = os.path.join(state_dir, "_LATEST.json")
-    state = _pointer_read(spark, latest_path)
+    state = _committed_pointer(spark, state_dir)
     if state is not None and int(state["batch_id"]) >= batch_id:
         # replay of an already-committed batch (crash landed between the
         # pointer rename and the checkpoint commit): nothing to do
@@ -436,7 +462,8 @@ def _link_batch(
             f"{bool(state.get('contracted', False))}; don't flip the "
             f"mode mid-stream"
         )
-    if state is not None and state.get("tombstones"):
+    tomb_ids = None if state is None else _tombstone_ids(spark, state)
+    if tomb_ids is not None:
         # A tombstoned conversation is DELETED, not merely hidden: an
         # at-least-once upstream replaying the very data a takedown
         # removed must not resurrect it. Without this filter the
@@ -450,9 +477,6 @@ def _link_batch(
         # entity (round-5 review). Legitimate re-admission is an
         # explicit maintenance sequence: compact_state (clears the
         # tombstones) first, then ingest.
-        tomb_ids = F.broadcast(
-            spark.read.parquet(state["tombstones"]).select("conv_id")
-        )
         batch_df = batch_df.join(tomb_ids, "conv_id", "left_anti")
         if batch_df.isEmpty():
             return
@@ -481,13 +505,11 @@ def _link_batch(
         if anchor_snapshot is None:
             anchor_snapshot = token_df(plan["features"], cfg)
         # the batch's MATCH-EDGE contribution (src, dst) — append-only
-        # like features/keys. Committing it is what makes
-        # retract_from_state's zero-rescore mode possible (retract's
-        # match_edges path: filter committed edges instead of
-        # re-blocking + re-scoring survivors) — match edges are a small
-        # fraction of pair volume and were being computed then thrown
-        # away every batch (round-5 review). plan["edges"] already
-        # includes any (rep, member) expansions.
+        # like features/keys. retract_from_state repairs labels by
+        # filtering these committed edges, never by re-blocking +
+        # re-scoring survivors — match edges are a small fraction of
+        # pair volume. plan["edges"] already includes any (rep, member)
+        # expansions.
         # Written FIRST and read back so the iterative CC below consumes
         # the parquet leaf instead of re-running the scoring subtree.
         plan["edges"].write.mode("overwrite").parquet(edir)
@@ -521,25 +543,9 @@ def _link_batch(
     else:
         from pipeline.incremental import increment_tuning
 
-        # a committed state WITHOUT edge dirs predates the match-edge
-        # layout. Appending this batch's edges would commit edge_dirs
-        # holding ONLY post-upgrade batches — retract_from_state would
-        # then see a non-empty edge table and run its zero-rescore
-        # repair over a graph missing every pre-upgrade match edge,
-        # silently splitting old entities (round-5 review). Uncontracted
-        # states stay pre-edges (retraction keeps the rescore
-        # fallback); contracted states REQUIRE the complete layout.
-        has_edges = bool(state.get("edge_dirs"))
-        if contracted and (not has_edges or not state.get("dup_dirs")):
-            raise ValueError(
-                f"contracted state at {state_dir} is missing committed "
-                "edge/dup dirs; representative promotion and the exact-"
-                "dup short-circuit need the complete layout — rebuild "
-                "the state (bootstrap commits both)"
-            )
         feats, keys, counts, clusters0 = _load_state(spark, state)
-        anchors_dir = state.get("anchors")
-        adf = spark.read.parquet(anchors_dir) if anchors_dir else None
+        anchors_dir = state["anchors"]
+        adf = spark.read.parquet(anchors_dir)
         # tunes ``spark`` only; the plans built from ``batch_df`` run on
         # the query's cloned session (see increment_tuning's docstring)
         with increment_tuning(spark):
@@ -556,8 +562,7 @@ def _link_batch(
             # returned as out["new_keys"] so the commit neither
             # re-explodes the increment nor re-joins the anchor
             # snapshot, and never semi-joins the FULL committed key
-            # table (round-5 review; committed-state mode always
-            # produces it)
+            # table
             out["new_keys"].write.mode("overwrite").parquet(kdir)
             out["key_counts"].write.mode("overwrite").parquet(cdir)
             out["clusters"].write.mode("overwrite").parquet(ldir)
@@ -566,18 +571,13 @@ def _link_batch(
             dup_assign = out.get("dup_assign")
             if dup_assign is not None:
                 dup_assign.write.mode("overwrite").parquet(ddir)
-            if has_edges:
-                match_edge_list(out["scored"], dup_assign).write.mode(
-                    "overwrite"
-                ).parquet(edir)
+            match_edge_list(out["scored"], dup_assign).write.mode(
+                "overwrite"
+            ).parquet(edir)
         feature_dirs = state["feature_dirs"] + [fdir]
         key_dirs = state["key_dirs"] + [kdir]
-        # pre-edges states stay pre-edges (see the guard above): never
-        # start an edge list that would shadow the rescore fallback
-        edge_dirs = state["edge_dirs"] + [edir] if has_edges else []
-        dup_dirs = state.get("dup_dirs", []) + (
-            [ddir] if contracted else []
-        )
+        edge_dirs = state["edge_dirs"] + [edir]
+        dup_dirs = state["dup_dirs"] + [ddir] if contracted else []
     release_caches()
     payload = {
         "batch_id": batch_id,
@@ -586,16 +586,15 @@ def _link_batch(
         "edge_dirs": edge_dirs,
         "counts": cdir,
         "clusters": ldir,
+        "anchors": anchors_dir,
         # the state's mode is part of its contract: rep-only feature/key
         # state (contracted) must never be consumed by an uncontracted
-        # step, and retraction routes by it (representative promotion vs
-        # survivor re-score)
+        # step, and retraction routes by it (representative promotion
+        # only in contracted states)
         "contracted": contracted,
     }
     if dup_dirs:
         payload["dup_dirs"] = dup_dirs
-    if anchors_dir:
-        payload["anchors"] = anchors_dir
     if state is not None:
         # carry maintenance metadata (retraction tombstones, revision
         # counter) forward through increment commits
@@ -628,8 +627,8 @@ def streaming_incremental_link(
       features_b{n}/   append-only per-batch increment feature rows
       keys_b{n}/       append-only per-batch increment blocking keys
       edges_b{n}/      append-only per-batch MATCH edges (src, dst) —
-                       the committed match graph; feeds
-                       retract_from_state's zero-rescore mode
+                       the committed match graph retract_from_state
+                       repairs labels from
       dups_b{n}/       (contracted only) per-batch (conv_id, rep_id,
                        hit) — which collapsed members rode which rep:
                        the audit/enumeration table for docs that
@@ -642,10 +641,19 @@ def streaming_incremental_link(
                        incremental_link anchor_df contract); refresh by
                        rebuilding the base, never per-increment
       _LATEST.json     atomic pointer {batch_id, feature_dirs, key_dirs,
-                       counts, clusters, contracted} — rename-committed through the
-                       Hadoop FS API, so it lives on the SAME filesystem
-                       as the parquet state (atomic on HDFS/local; on
-                       S3A use an atomic table format instead)
+                       edge_dirs, dup_dirs (contracted only), counts,
+                       clusters, anchors, contracted} plus, once a
+                       retraction or compaction has run, {rev,
+                       tombstones (until the next compaction),
+                       unmatched_removed (a retraction's own pointer,
+                       when its request named unknown ids)} —
+                       rename-committed through the Hadoop FS
+                       API, so it lives on the SAME filesystem as the
+                       parquet state (atomic on HDFS/local; on S3A use
+                       an atomic table format instead). A pointer
+                       without edge_dirs, anchors or (contracted)
+                       dup_dirs is rejected before any write: rebuild
+                       such a state
 
     Exactly-once: the streaming checkpoint prevents re-processing on
     restart, and a REPLAYED batch (crash after the pointer rename but
@@ -773,10 +781,9 @@ def retract_from_state(
     key counts) are rewritten. A tombstoned id is DELETED for good:
     ``_link_batch`` drops it from every later increment, so an upstream
     replay cannot resurrect it (re-admit via ``compact_state`` first).
-    States carrying ``edge_dirs`` repair connectivity by FILTERING the
-    committed match edges (``retract``'s zero-rescore ``match_edges``
-    mode); plain pre-edges layouts fall back to entity-bounded
-    re-scoring. In contracted states the tombstones also hide every
+    Connectivity is repaired by FILTERING the committed match edges
+    (``retract`` re-blocks and re-scores nothing). In contracted states
+    the tombstones also hide every
     superseded row of a promoted class — old-rep feature/key rows,
     old-rep-endpoint edges, old-rep dup rows — at load time
     (``_load_state`` / ``_load_edges`` / ``_load_dups``), and the
@@ -799,34 +806,13 @@ def retract_from_state(
 
     cfg = cfg or DEFAULT_CONFIG
     latest_path = os.path.join(state_dir, "_LATEST.json")
-    state = _pointer_read(spark, latest_path)
+    state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
     contracted = bool(state.get("contracted", False))
-    # committed match edges (layouts from the edges_b{n} era): the
-    # zero-rescore path — retraction filters the committed edge table to
-    # survivors of affected entities instead of re-featurizing +
-    # re-blocking + re-scoring them (retract's match_edges mode, "the
-    # 100-TB path"). Older plain states without edge_dirs fall back to
-    # the re-scoring mode.
-    match_edges = _load_edges(spark, state)
-    if contracted and match_edges is None:
-        raise ValueError(
-            f"contracted state at {state_dir} has no committed edge dirs; "
-            "representative promotion rewrites committed match edges and "
-            "cannot run without them (pre-edges layouts: rebuild the "
-            "state uncontracted)"
-        )
     feats, keys, counts, clusters = _load_state(spark, state)
-    dups = None
-    if contracted:
-        dups = _load_dups(spark, state)
-        if dups is None:
-            dups = local_frame(
-                spark, [], "conv_id string, rep_id string, hit boolean"
-            )
-    anchors_dir = state.get("anchors")
-    adf = spark.read.parquet(anchors_dir) if anchors_dir else None
+    match_edges = _load_edges(spark, state)
+    dups = _load_dups(spark, state) if contracted else None
     with increment_tuning(spark):
         # Resolve the request against the committed ids ONCE, in one
         # collect bounded by the request size (the committed ids it names
@@ -852,8 +838,7 @@ def retract_from_state(
             spark, [(i,) for i in sorted(matched)], "conv_id string"
         )
         out = retract(
-            feats, clusters, remove_ids, cfg, anchor_df=adf,
-            match_edges=match_edges,
+            feats, clusters, remove_ids, cfg, match_edges=match_edges,
             existing_keys=keys, existing_key_counts=counts, dup_map=dups,
         )
         # Tombstones accumulate (union with the committed table) until
@@ -877,18 +862,18 @@ def retract_from_state(
             "batch_id": state["batch_id"],
             "feature_dirs": list(state["feature_dirs"]),
             "key_dirs": list(state["key_dirs"]),
+            # edge/dup dirs stay append-only: removed ids are tombstone-
+            # filtered at load (_load_edges / _load_dups); compact_state
+            # reclaims
+            "edge_dirs": list(state["edge_dirs"]),
             "counts": cdir,
             "clusters": ldir,
+            "anchors": state["anchors"],
             "tombstones": tdir,
             "rev": rev,
             "contracted": contracted,
         }
-        # edge/dup dirs stay append-only: removed ids are tombstone-
-        # filtered at load (_load_edges / _load_dups); compact_state
-        # reclaims
-        if state.get("edge_dirs"):
-            payload["edge_dirs"] = list(state["edge_dirs"])
-        if state.get("dup_dirs"):
+        if contracted:
             payload["dup_dirs"] = list(state["dup_dirs"])
         # promotion deltas (contracted mode only): each is written to
         # ``{suffix}_rev{rev}`` and APPENDED to the payload's dir list
@@ -901,9 +886,7 @@ def retract_from_state(
             if key in out:
                 pdir = os.path.join(state_dir, f"{suffix}_rev{rev}")
                 out[key].write.mode("overwrite").parquet(pdir)
-                payload[dirs_key] = payload.get(dirs_key, []) + [pdir]
-        if state.get("anchors"):
-            payload["anchors"] = state["anchors"]
+                payload[dirs_key] = payload[dirs_key] + [pdir]
         # never-silent: requested ids that matched no committed doc are
         # NOT tombstoned (they would blackhole a future first ingestion)
         # — they are counted into the committed pointer so the no-op is
@@ -931,44 +914,41 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
     import os
 
     latest_path = os.path.join(state_dir, "_LATEST.json")
-    state = _pointer_read(spark, latest_path)
+    state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
+    contracted = bool(state.get("contracted", False))
     feats, keys, _, _ = _load_state(spark, state)
     rev = int(state.get("rev", 0)) + 1
     fdir = os.path.join(state_dir, f"features_compact_rev{rev}")
     kdir = os.path.join(state_dir, f"keys_compact_rev{rev}")
+    edir = os.path.join(state_dir, f"edges_compact_rev{rev}")
     feats.write.mode("overwrite").parquet(fdir)
     keys.write.mode("overwrite").parquet(kdir)
-    payload = {
-        "batch_id": state["batch_id"],
-        "feature_dirs": [fdir],
-        "key_dirs": [kdir],
-        "counts": state["counts"],
-        "clusters": state["clusters"],
-        "rev": rev,
-        "contracted": bool(state.get("contracted", False)),
-    }
     # Edges MUST compact through the same tombstone filter BEFORE the
     # tombstones are cleared: the anti-join that hides a retracted id's
     # edges lives at load time, so folding the raw dirs and dropping the
     # tombstone table in one commit would resurrect every edge touching
     # a removed endpoint.
-    edges = _load_edges(spark, state)
-    if edges is not None:
-        edir = os.path.join(state_dir, f"edges_compact_rev{rev}")
-        edges.write.mode("overwrite").parquet(edir)
-        payload["edge_dirs"] = [edir]
-    # same load-time filter as every dup reader (_load_dups): the rep_id
-    # anti-join must run BEFORE the tombstones are cleared, or a promoted
-    # class's superseded old-rep rows would resurrect
-    dups = _load_dups(spark, state)
-    if dups is not None:
+    _load_edges(spark, state).write.mode("overwrite").parquet(edir)
+    payload = {
+        "batch_id": state["batch_id"],
+        "feature_dirs": [fdir],
+        "key_dirs": [kdir],
+        "edge_dirs": [edir],
+        "counts": state["counts"],
+        "clusters": state["clusters"],
+        "anchors": state["anchors"],
+        "rev": rev,
+        "contracted": contracted,
+    }
+    if contracted:
+        # same load-time filter as every dup reader (_load_dups): the
+        # rep_id anti-join must run BEFORE the tombstones are cleared, or
+        # a promoted class's superseded old-rep rows would resurrect
         ddir = os.path.join(state_dir, f"dups_compact_rev{rev}")
-        dups.write.mode("overwrite").parquet(ddir)
+        _load_dups(spark, state).write.mode("overwrite").parquet(ddir)
         payload["dup_dirs"] = [ddir]
-    if state.get("anchors"):
-        payload["anchors"] = state["anchors"]
     _pointer_commit(spark, latest_path, payload)
     return payload
 
@@ -982,8 +962,7 @@ def vacuum_state(spark: SparkSession, state_dir: str) -> list[str]:
     Returns the deleted paths."""
     import os
 
-    latest_path = os.path.join(state_dir, "_LATEST.json")
-    state = _pointer_read(spark, latest_path)
+    state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
     keep = {
@@ -991,11 +970,10 @@ def vacuum_state(spark: SparkSession, state_dir: str) -> list[str]:
         for p in (
             state["feature_dirs"]
             + state["key_dirs"]
-            + state.get("edge_dirs", [])
+            + state["edge_dirs"]
             + state.get("dup_dirs", [])
-            + [state["counts"], state["clusters"]]
+            + [state["counts"], state["clusters"], state["anchors"]]
             + ([state["tombstones"]] if state.get("tombstones") else [])
-            + ([state["anchors"]] if state.get("anchors") else [])
         )
     }
     jvm, conf, fs, root = _pointer_fs(spark, state_dir)

@@ -1,7 +1,8 @@
 """Incremental linkage: base + increment must equal the full batch run
 (cap-free — the audits make the condition observable), entity merges via
-a bridging new doc must relabel committed clusters, and the restricted
-key join must broadcast the increment side (no corpus self-join)."""
+a bridging new doc must relabel committed clusters, the committed key
+state must rebuild the union's, and the restricted key join must
+broadcast the increment side (no corpus self-join)."""
 
 from __future__ import annotations
 
@@ -270,62 +271,157 @@ def test_redelivered_ids_are_dropped_not_duplicated(spark):
     )
 
 
+def _norm(df) -> pd.DataFrame:
+    pdf = df.toPandas()
+    for c in pdf.columns:
+        if pdf[c].dtype == object:
+            # array columns (the pair list's key arrays) aren't sortable
+            pdf[c] = pdf[c].map(str)
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def _split_feats(turns, cfg):
+    """(base, increment) feature frames of a corpus split by conv_id
+    hash parity."""
+    from pipeline.canonicalize import canonicalize
+    from pipeline.features import featurize
+
+    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
+    return (
+        featurize(canonicalize(turns.where(parity == 0)), cfg),
+        featurize(canonicalize(turns.where(parity == 1)), cfg),
+    )
+
+
 def test_committed_key_state_matches_union(spark, hot_corpus):
-    """capped_key_table_from_state(committed base keys+counts, increment)
-    must return EXACTLY capped_key_table(union) — including when hot-key
-    caps BIND (the hot_corpus fixture plants 90 hot-key convs): the coin
-    depends only on (conv_id, key) and merged counts equal union counts.
-    Anchors disabled: live-df anchors are the one non-doc-local family
-    (covered by the frozen-df theorem test)."""
+    """incremental_candidate_pairs over committed base keys+counts and
+    the increment must rebuild EXACTLY the union's blocking state, and
+    its member cap must agree with capped_key_table(union) — including
+    when hot-key caps BIND (the hot_corpus fixture plants 90 hot-key
+    convs): the coin depends only on (conv_id, key) and merged counts
+    equal union counts. Anchors disabled: live-df anchors are the one
+    non-doc-local family (covered by the frozen-df theorem test)."""
     from dataclasses import replace
 
     from pipeline.blocking import (
+        _cap_members,
         capped_key_table,
-        capped_key_table_from_state,
         key_table_with_counts,
     )
-    from pipeline.canonicalize import canonicalize
     from pipeline.config import DEFAULT_CONFIG
-    from pipeline.features import featurize
 
     cfg = replace(DEFAULT_CONFIG, anchor_max_df=1)
     turns = spark.createDataFrame(hot_corpus.turns)
-    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
-    feats_all = featurize(canonicalize(turns), cfg)
-    base_feats = featurize(canonicalize(turns.where(parity == 0)), cfg)
-    new_feats = featurize(canonicalize(turns.where(parity == 1)), cfg)
+    base_feats, new_feats = _split_feats(turns, cfg)
+    feats_all = base_feats.unionByName(new_feats)
 
     kept_u, audit_u = capped_key_table(feats_all, cfg)
+    keys_u, counts_u = key_table_with_counts(feats_all, cfg)
     ek, ec = key_table_with_counts(base_feats, cfg)
-    kept_s, audit_s = capped_key_table_from_state(ek, ec, new_feats, cfg)
-
-    def _norm(df):
-        return (
-            df.toPandas()
-            .sort_values(list(df.columns))
-            .reset_index(drop=True)
-        )
+    _, audit_s, _, _, keys_s, counts_s, _ = incremental_candidate_pairs(
+        new_feats, ek, ec, cfg
+    )
 
     a_u, a_s = _norm(audit_u), _norm(audit_s)
     assert len(a_u) > 0, "fixture produced no hot keys — caps never bound"
     pd.testing.assert_frame_equal(a_u, a_s)
-    pd.testing.assert_frame_equal(_norm(kept_u), _norm(kept_s))
+    pd.testing.assert_frame_equal(_norm(keys_u), _norm(keys_s))
+    pd.testing.assert_frame_equal(_norm(counts_u), _norm(counts_s))
+    pd.testing.assert_frame_equal(
+        _norm(kept_u), _norm(_cap_members(keys_s, counts_s, cfg)[0])
+    )
+
+
+def test_derived_key_state_equals_explicit(spark, hot_corpus):
+    """incremental_link without committed keys derives them from the
+    committed features, with anchors pinned to token_df over existing ∪
+    increment; the result must equal a step given exactly that state
+    explicitly — hot caps binding, anchors and the hot-key star on."""
+    from dataclasses import replace
+
+    from pipeline.blocking import key_table_with_counts, token_df
+    from pipeline.config import DEFAULT_CONFIG
+
+    cfg = replace(DEFAULT_CONFIG, hot_key_star=True)
+    assert cfg.anchor_max_df >= 2
+    turns = spark.createDataFrame(hot_corpus.turns)
+    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
+    base_plan = build_plan(turns.where(parity == 0), cfg)
+    base_clusters, _ = cluster_edges(
+        base_plan["edges"], base_plan["features"]
+    )
+    base_feats = base_plan["features"].localCheckpoint(eager=True)
+    base_clusters = base_clusters.localCheckpoint(eager=True)
+    _, inc_feats = _split_feats(turns, cfg)
+    inc_turns = turns.where(parity == 1)
+    snapshot = token_df(base_feats.unionByName(inc_feats), cfg)
+    ek, ec = key_table_with_counts(base_feats, cfg, snapshot)
+
+    derived = incremental_link(base_feats, base_clusters, inc_turns, cfg)
+    explicit = incremental_link(
+        base_feats, base_clusters, inc_turns, cfg, anchor_df=snapshot,
+        existing_keys=ek, existing_key_counts=ec,
+    )
+    assert derived["hot_key_audit"].count() > 0, "caps never bound"
+    for k in ("clusters", "keys", "key_counts"):
+        pd.testing.assert_frame_equal(
+            _norm(derived[k]), _norm(explicit[k]), obj=k
+        )
+
+
+def test_hot_list_over_driver_limit_matches_pinned(
+    spark, hot_corpus, monkeypatch
+):
+    """Past ``_DRIVER_HOT_LIMIT`` scoped hot keys (a backfill-sized
+    increment) the hub and star plans stay distributed instead of being
+    pulled to the driver; pairs and every audit must equal the
+    driver-pinned branch."""
+    from dataclasses import replace
+
+    import pipeline.incremental as incremental_mod
+    from pipeline.blocking import key_table_with_counts
+    from pipeline.config import DEFAULT_CONFIG
+
+    cfg = replace(DEFAULT_CONFIG, anchor_max_df=1, hot_key_star=True)
+    turns = spark.createDataFrame(hot_corpus.turns)
+    base_feats, new_feats = _split_feats(turns, cfg)
+    ek, ec = key_table_with_counts(base_feats, cfg)
+
+    pulls = []
+    real_local_frame = incremental_mod.local_frame
+
+    def _count_driver_pull(*a, **kw):
+        pulls.append(1)
+        return real_local_frame(*a, **kw)
+
+    monkeypatch.setattr(incremental_mod, "local_frame", _count_driver_pull)
+    pinned = incremental_candidate_pairs(new_feats, ek, ec, cfg)[:4]
+    assert pulls, "the increment's scoped hot list came out empty"
+
+    def _no_driver_pull(*a, **kw):
+        raise AssertionError("over the limit the hot list stays distributed")
+
+    monkeypatch.setattr(incremental_mod, "_DRIVER_HOT_LIMIT", 0)
+    monkeypatch.setattr(incremental_mod, "local_frame", _no_driver_pull)
+    distributed = incremental_candidate_pairs(new_feats, ek, ec, cfg)[:4]
+    names = ("pairs", "hot_key_audit", "pair_cap_audit", "cap_risk_audit")
+    for name, got, want in zip(names, distributed, pinned):
+        pd.testing.assert_frame_equal(_norm(got), _norm(want), obj=name)
 
 
 def test_incremental_key_join_broadcasts_new_side(spark, turns_df):
     """The restricted candidate join must broadcast the (small) new-key
     side — the corpus key table streams map-side, no corpus self-join
     and no shuffle of the big side."""
-    from pipeline.canonicalize import canonicalize
-    from pipeline.features import featurize
+    from dataclasses import replace
 
-    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
-    feats_all = featurize(canonicalize(turns_df))
-    new_ids = (
-        featurize(canonicalize(turns_df.where(parity == 1)))
-        .select("conv_id")
-    )
-    pairs = incremental_candidate_pairs(feats_all, new_ids)[0]
+    from pipeline.blocking import key_table_with_counts
+    from pipeline.config import DEFAULT_CONFIG
+
+    cfg = replace(DEFAULT_CONFIG, anchor_max_df=1)
+    base_feats, new_feats = _split_feats(turns_df, cfg)
+    ek, ec = key_table_with_counts(base_feats, cfg)
+    pairs = incremental_candidate_pairs(new_feats, ek, ec, cfg)[0]
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
@@ -338,40 +434,21 @@ def test_committed_state_mode_requires_pinned_anchors(spark, turns_df):
     review finding)."""
     from dataclasses import replace
 
-    from pipeline.blocking import (
-        capped_key_table_from_state,
-        key_table_with_counts,
-        token_df,
-    )
-    from pipeline.canonicalize import canonicalize
+    from pipeline.blocking import key_table_with_counts, token_df
     from pipeline.config import DEFAULT_CONFIG
-    from pipeline.features import featurize
 
     cfg = DEFAULT_CONFIG  # anchors ON (anchor_max_df >= 2)
-    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
-    base_turns = turns_df.where(parity == 0)
-    inc_turns = turns_df.where(parity == 1)
-    base_feats = featurize(canonicalize(base_turns), cfg)
+    base_feats, inc_feats = _split_feats(turns_df, cfg)
     snapshot = token_df(base_feats, cfg).localCheckpoint(eager=True)
     ek, ec = key_table_with_counts(base_feats, cfg, snapshot)
-    inc_feats = featurize(canonicalize(inc_turns), cfg)
 
     with pytest.raises(ValueError, match="anchor"):
-        capped_key_table_from_state(ek, ec, inc_feats, cfg)
-    with pytest.raises(ValueError, match="anchor"):
-        incremental_candidate_pairs(
-            base_feats.unionByName(inc_feats),
-            inc_feats.select("conv_id"),
-            cfg,
-            existing_keys=ek,
-            existing_counts=ec,
-            new_feats=inc_feats,
-        )
+        incremental_candidate_pairs(inc_feats, ek, ec, cfg)
     # pinned or disabled: both fine
-    capped_key_table_from_state(ek, ec, inc_feats, cfg, anchor_df=snapshot)
+    incremental_candidate_pairs(inc_feats, ek, ec, cfg, anchor_df=snapshot)
     cfg_off = replace(cfg, anchor_max_df=1)
     ek2, ec2 = key_table_with_counts(base_feats, cfg_off)
-    capped_key_table_from_state(ek2, ec2, inc_feats, cfg_off)
+    incremental_candidate_pairs(inc_feats, ek2, ec2, cfg_off)
 
 
 def test_cap_risk_audit_survives_mega_member_counts(spark, turns_df):
@@ -383,14 +460,10 @@ def test_cap_risk_audit_survives_mega_member_counts(spark, turns_df):
     from dataclasses import replace
 
     from pipeline.blocking import key_table_with_counts
-    from pipeline.canonicalize import canonicalize
     from pipeline.config import DEFAULT_CONFIG
-    from pipeline.features import featurize
 
     cfg = replace(DEFAULT_CONFIG, anchor_max_df=1)  # anchors off
-    parity = F.crc32(F.col("conv_id").cast("binary")) % 2
-    base_feats = featurize(canonicalize(turns_df.where(parity == 0)), cfg)
-    inc_feats = featurize(canonicalize(turns_df.where(parity == 1)), cfg)
+    base_feats, inc_feats = _split_feats(turns_df, cfg)
     ek, ec = key_table_with_counts(base_feats, cfg)
     # synthetic committed mega-key: a key value no real doc hashes to
     mega = spark.createDataFrame(
@@ -399,14 +472,7 @@ def test_cap_risk_audit_survives_mega_member_counts(spark, turns_df):
     )
     ec = ec.unionByName(mega)
 
-    out = incremental_candidate_pairs(
-        base_feats.unionByName(inc_feats),
-        inc_feats.select("conv_id"),
-        cfg,
-        existing_keys=ek,
-        existing_counts=ec,
-        new_feats=inc_feats,
-    )
+    out = incremental_candidate_pairs(inc_feats, ek, ec, cfg)
     cap_risk = out[3].where(F.col("key") == -987654321098765432).collect()
     assert len(cap_risk) == 1, "mega-key missing from cap_risk_audit"
     row = cap_risk[0]

@@ -404,6 +404,7 @@ def test_hot_key_leaves_plan_as_local_relations(spark, monkeypatch):
 
     import pipeline.blocking as blocking_mod
     import pipeline.incremental as incremental_mod
+    from pipeline.blocking import key_table_with_counts
     from pipeline.canonicalize import canonicalize
     from pipeline.config import DEFAULT_CONFIG
     from pipeline.features import featurize
@@ -416,8 +417,9 @@ def test_hot_key_leaves_plan_as_local_relations(spark, monkeypatch):
     rows = [(f"m{i:02d}", boiler) for i in range(12)]
     rows += [(f"o{i:02d}", f"unrelated text number {i} x{i}y") for i in range(4)]
     feats = featurize(canonicalize(_turns(spark, rows)), cfg)
-    new_ids = spark.createDataFrame(
-        [(f"m{i:02d}",) for i in range(6)], "conv_id string"
+    is_new = F.col("conv_id").isin([f"m{i:02d}" for i in range(6)])
+    existing_keys, existing_counts = key_table_with_counts(
+        feats.where(~is_new), cfg
     )
     seen = {}
     cap_members = incremental_mod._cap_members
@@ -434,7 +436,9 @@ def test_hot_key_leaves_plan_as_local_relations(spark, monkeypatch):
     monkeypatch.setattr(incremental_mod, "_cap_members", cap_spy)
     monkeypatch.setattr(blocking_mod, "hot_star_pairs", star_spy)
     try:
-        incremental_mod.incremental_candidate_pairs(feats, new_ids, cfg)
+        incremental_mod.incremental_candidate_pairs(
+            feats.where(is_new), existing_keys, existing_counts, cfg
+        )
     finally:
         release_caches()
     assert seen.get("hubs") is not None and seen.get("hot") is not None, (

@@ -1,8 +1,8 @@
 """Decremental ER (``pipeline.incremental.retract``): deleting docs from
 committed state must equal one plain batch run over the remaining corpus
 — including entity SPLITS (removed bridge doc) and min-id label handoffs
-(removed label-carrier) — in both edge-recovery modes (committed match
-edges given / survivor re-scoring), and compose with incremental_link.
+(removed label-carrier) — repaired from the committed match edges, and
+compose with incremental_link.
 """
 
 from __future__ import annotations
@@ -94,10 +94,9 @@ def _committed(spark, rows, cfg):
     return turns, plan, clusters
 
 
-def test_bridge_removal_splits_entity_both_modes(spark):
+def test_bridge_removal_splits_entity(spark):
     """Removing the bridge doc must SPLIT its entity — the hard
-    decremental case local repairs get wrong; verified in both the
-    committed-edge mode and the re-scoring mode."""
+    decremental case local repairs get wrong."""
     turns, plan, clusters = _committed(spark, CHAIN_ROWS, NOCAP)
     pdc = _clusters_pd(clusters).set_index("conv_id")["entity_id"]
     assert pdc["a1"] == pdc["a2"] == pdc["a3"] == "a1", (
@@ -111,13 +110,12 @@ def test_bridge_removal_splits_entity_both_modes(spark):
         want.set_index("conv_id")["entity_id"]["a3"] == "a3"
     ), "batch reference must show the split"
 
-    for mode_edges in (plan["edges"], None):
-        out = retract(
-            plan["features"], clusters, _ids(spark, ["a2"]), NOCAP,
-            match_edges=mode_edges,
-        )
-        pd.testing.assert_frame_equal(want, _clusters_pd(out["clusters"]))
-        assert out["features"].where("conv_id = 'a2'").count() == 0
+    out = retract(
+        plan["features"], clusters, _ids(spark, ["a2"]), NOCAP,
+        match_edges=plan["edges"],
+    )
+    pd.testing.assert_frame_equal(want, _clusters_pd(out["clusters"]))
+    assert out["features"].where("conv_id = 'a2'").count() == 0
 
 
 def test_min_label_handoff(spark):
@@ -149,11 +147,10 @@ def test_retract_unknown_id_is_noop_on_labels(spark):
     )
 
 
-def test_retract_equals_batch_synth_both_modes(spark, turns_df):
+def test_retract_equals_batch_synth(spark, turns_df):
     """Synth-corpus equality: retracting a deterministic ~20% slice ==
-    plain batch over the remainder, with committed edges AND with
-    re-scoring; keys/key_counts state stays consistent with a fresh
-    rebuild over the survivors."""
+    plain batch over the remainder; keys/key_counts state stays
+    consistent with a fresh rebuild over the survivors."""
     from pipeline.blocking import key_table_with_counts
 
     cfg = NOCAP
@@ -165,13 +162,11 @@ def test_retract_equals_batch_synth_both_modes(spark, turns_df):
     remove = turns_df.where(doomed).select("conv_id").distinct()
     want = _batch_clusters(spark, turns_df.where(~doomed), cfg)
 
-    for mode_edges in (plan["edges"], None):
-        out = retract(
-            plan["features"], clusters, remove, cfg,
-            match_edges=mode_edges,
-            existing_keys=keys, existing_key_counts=counts,
-        )
-        pd.testing.assert_frame_equal(want, _clusters_pd(out["clusters"]))
+    out = retract(
+        plan["features"], clusters, remove, cfg, match_edges=plan["edges"],
+        existing_keys=keys, existing_key_counts=counts,
+    )
+    pd.testing.assert_frame_equal(want, _clusters_pd(out["clusters"]))
 
     # key state after retraction == key state rebuilt from survivors
     fresh_keys, fresh_counts = key_table_with_counts(
@@ -216,14 +211,3 @@ def test_retract_then_increment_equals_batch(spark, turns_df):
     )
     pd.testing.assert_frame_equal(want, _clusters_pd(out["clusters"]))
 
-
-def test_retract_rescore_requires_pinned_anchors():
-    """With anchors enabled and no match_edges, retract must fail loudly
-    when anchor_df is omitted — df computed over the survivor slice would
-    mint bogus rare-token anchors (round-5 review: the two sibling
-    committed-state paths already raise; retract was the one quiet one).
-    Pure plan-construction check: the ValueError must fire before any
-    Spark job, so no fixtures are needed."""
-    anchored = replace(NOCAP, anchor_max_df=8)
-    with pytest.raises(ValueError, match="anchor_df"):
-        retract(None, None, None, anchored, match_edges=None)

@@ -102,11 +102,6 @@ CHAIN_ROWS = [
 ]
 
 
-def test_requires_match_edges():
-    with pytest.raises(ValueError, match="match-edge"):
-        retract_contracted(None, None, None, None, NOCAP, match_edges=None)
-
-
 def test_member_removal_is_leaf_drop(spark):
     """Removing a collapsed MEMBER never splits or relabels anything
     else: members are star leaves."""

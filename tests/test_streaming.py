@@ -399,10 +399,10 @@ def test_streaming_link_anchors_on_matches_frozen_batch(
     want = _batch_reference(spark, t, cfg, anchor_df=adf)
     pd.testing.assert_frame_equal(got, want)
 
-    # retraction repairs against the SAME frozen snapshot — in BOTH
-    # modes: contracted states route through representative promotion
-    # (_retract_contracted_state), which must also consume the committed
-    # class-weighted anchor snapshot, not df recomputed over survivors
+    # retraction repairs from the committed match edges in BOTH modes
+    # (contracted states route through representative promotion), so its
+    # labels keep the frozen snapshot's blocking — nothing is re-blocked
+    # with df recomputed over survivors
     import zlib
 
     doomed = sorted(
@@ -1171,24 +1171,14 @@ def test_tombstoned_id_never_resurrects(spark, tmp_path):
     )
 
 
-def test_retract_from_state_edges_mode_and_rescore_fallback(
-    spark, tmp_path, monkeypatch
-):
-    """States committed with edge_dirs retract through retract()'s
-    zero-rescore match_edges mode (the committed match graph is
-    filtered, nothing is re-blocked or re-scored — round-5 review: the
-    edges were computed every batch and thrown away); a pre-edges layout
-    (edge_dirs stripped from the pointer) falls back to entity-bounded
-    re-scoring. Both modes repair labels to the same batch reference."""
-    import json
+def test_retract_from_state_repairs_from_committed_edges(spark, tmp_path):
+    """A retraction repairs labels by filtering the committed match graph
+    (nothing is re-blocked or re-scored) to the same labels as a batch
+    run over the remaining corpus, and the edge dirs stay in the
+    committed layout."""
+    import zlib
 
-    import pipeline.incremental as pinc
-    from pipeline.streaming import (
-        _pointer_commit,
-        _pointer_read,
-        retract_from_state,
-        streaming_incremental_link,
-    )
+    from pipeline.streaming import retract_from_state, streaming_incremental_link
 
     cfg = _nocap_cfg()
     corpus = synth.generate(n_base=40, seed=59)
@@ -1199,27 +1189,13 @@ def test_retract_from_state_edges_mode_and_rescore_fallback(
     q = streaming_incremental_link(spark, src, state, ckpt, cfg=cfg)
     _await_done(q)
 
-    seen_modes = []
-    real_retract = pinc.retract
-
-    def spy(*args, **kwargs):
-        seen_modes.append(kwargs.get("match_edges") is not None)
-        return real_retract(*args, **kwargs)
-
-    monkeypatch.setattr(pinc, "retract", spy)
-
-    import zlib
-
     doomed = sorted(
         c for c in t["conv_id"].unique()
         if zlib.crc32(c.encode()) % 5 == 0
     )
     assert doomed
     want = _batch_reference(spark, t[~t["conv_id"].isin(doomed)], cfg)
-
-    # --- edges mode (the committed layout) ---
     ptr = retract_from_state(spark, state, doomed, cfg=cfg)
-    assert seen_modes == [True], "edge_dirs state must take the edges mode"
     got = (
         spark.read.parquet(ptr["clusters"])
         .select("conv_id", "entity_id")
@@ -1228,105 +1204,56 @@ def test_retract_from_state_edges_mode_and_rescore_fallback(
     pd.testing.assert_frame_equal(got, want)
     assert ptr.get("edge_dirs"), "edge dirs must survive the retraction"
 
-    # --- rescore fallback (pre-edges layout) ---
-    state2 = str(tmp_path / "state2")
-    ckpt2 = str(tmp_path / "ckpt2")
-    q2 = streaming_incremental_link(spark, src, state2, ckpt2, cfg=cfg)
-    _await_done(q2)
-    p2 = os.path.join(state2, "_LATEST.json")
-    legacy = _pointer_read(spark, p2)
-    legacy.pop("edge_dirs")
-    _pointer_commit(spark, p2, legacy)
 
-    ptr2 = retract_from_state(spark, state2, doomed, cfg=cfg)
-    assert seen_modes == [True, False], "legacy state must re-score"
-    got2 = (
-        spark.read.parquet(ptr2["clusters"])
-        .select("conv_id", "entity_id")
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got2, want)
-
-
-def test_pre_edges_state_increment_keeps_rescore_fallback(spark, tmp_path):
-    """An increment over a PRE-EDGES committed state (edge_dirs absent —
-    the layout older deployments committed) must NOT start an edge list:
-    edge_dirs holding only post-upgrade batches would flip
-    retract_from_state into its zero-rescore mode over a match graph
-    missing every pre-upgrade edge, silently splitting old entities
-    (round-5 review). The state stays pre-edges and retraction takes the
-    rescore fallback, repairing to the exact batch reference."""
-    import json
-
-    import pipeline.incremental as pinc
+@pytest.mark.parametrize(
+    "contracted, field",
+    [(False, "edge_dirs"), (False, "anchors"), (True, "dup_dirs")],
+)
+def test_incomplete_state_layout_is_rejected(
+    spark, tmp_path, contracted, field
+):
+    """A committed pointer missing a field of the state layout (the
+    match-edge dirs, the anchor snapshot, or a contracted state's dup
+    dirs) must stop both the next micro-batch and a retraction with a
+    rebuild error before either writes anything: the pointer stays
+    byte-identical and no new batch or revision dir appears."""
     from pipeline.streaming import (
+        _link_batch,
         _pointer_commit,
         _pointer_read,
         retract_from_state,
-        streaming_incremental_link,
     )
 
     cfg = _nocap_cfg()
-    corpus = synth.generate(n_base=30, seed=61)
-    src = str(tmp_path / "src")
-    t = _conv_complete_drops(corpus, src, n_drops=2)
+    turns = synth.generate(n_base=8, seed=71).turns
     state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    q = streaming_incremental_link(spark, src, state, ckpt, cfg=cfg)
-    _await_done(q)
-
-    # simulate the pre-edges layout: strip edge_dirs from the pointer
-    p = os.path.join(state, "_LATEST.json")
-    legacy = _pointer_read(spark, p)
-    legacy.pop("edge_dirs")
-    _pointer_commit(spark, p, legacy)
-
-    # a NEW increment arrives post-upgrade
-    fresh = synth.generate(n_base=8, seed=62).turns.assign(
-        ts=lambda d: d["ts"].astype("datetime64[us]")
+    _link_batch(
+        spark, spark.createDataFrame(turns), 0, state, cfg,
+        contracted=contracted,
     )
+    latest = os.path.join(state, "_LATEST.json")
+    ptr = _pointer_read(spark, latest)
+    assert ptr.get(field), f"bootstrap must commit {field}"
+    ptr.pop(field)
+    _pointer_commit(spark, latest, ptr)
+    with open(latest, "rb") as f:
+        before = f.read()
+    dirs_before = sorted(os.listdir(state))
+
+    fresh = synth.generate(n_base=3, seed=72).turns
     fresh["conv_id"] = "fresh_" + fresh["conv_id"]
-    fresh.to_parquet(os.path.join(src, "fresh.parquet"), index=False)
-    q2 = streaming_incremental_link(spark, src, state, ckpt, cfg=cfg)
-    _await_done(q2)
-
-    ptr = _pointer_read(spark, p)
-    assert not ptr.get("edge_dirs"), (
-        "post-upgrade increment must not seed a partial edge list on a "
-        f"pre-edges state: {ptr.get('edge_dirs')}"
-    )
-    # the fresh convs linked normally
-    clusters = spark.read.parquet(ptr["clusters"])
-    assert (
-        clusters.where(F.col("conv_id").startswith("fresh_")).count()
-        == fresh["conv_id"].nunique()
-    )
-
-    # retraction on the upgraded-but-pre-edges state: rescore fallback,
-    # labels == batch over the remaining corpus (no silent split)
-    seen_modes = []
-    real_retract = pinc.retract
-    orig = pinc.retract
-
-    def spy(*args, **kwargs):
-        seen_modes.append(kwargs.get("match_edges") is not None)
-        return real_retract(*args, **kwargs)
-
-    pinc.retract = spy
-    try:
-        doomed = sorted(t["conv_id"].unique())[:3]
-        ptr2 = retract_from_state(spark, state, doomed, cfg=cfg)
-    finally:
-        pinc.retract = orig
-    assert seen_modes == [False], "pre-edges state must take the rescore mode"
-    all_t = pd.concat([t, fresh], ignore_index=True)
-    want = _batch_reference(spark, all_t[~all_t["conv_id"].isin(doomed)], cfg)
-    got = (
-        spark.read.parquet(ptr2["clusters"])
-        .select("conv_id", "entity_id")
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
+    with pytest.raises(ValueError, match="rebuild the state"):
+        _link_batch(
+            spark, spark.createDataFrame(fresh), 1, state, cfg,
+            contracted=contracted,
+        )
+    with pytest.raises(ValueError, match="rebuild the state"):
+        retract_from_state(
+            spark, state, [sorted(turns["conv_id"])[0]], cfg=cfg
+        )
+    with open(latest, "rb") as f:
+        assert f.read() == before
+    assert sorted(os.listdir(state)) == dirs_before
 
 
 def test_retract_unknown_id_is_not_tombstoned(spark, tmp_path):
