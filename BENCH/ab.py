@@ -1,11 +1,14 @@
 """Interleaved A/B of the repository benchmark between two code states.
 
-    python3 BENCH/ab.py --base <rev> --workload <w> --seeds 1-10 \
-        [--head <rev>] [--seconds 10] [--out runs.jsonl]
+    python3 BENCH/ab.py --base <rev> --head <rev> --workload <w> \
+        --seeds 1-10 [--seconds 10] [--out runs.jsonl]
 
 Each side is a clean export of its git revision (``git archive``) in a
-temporary directory; without ``--head`` the change side is this checkout
-as it stands, uncommitted edits included. For every seed, each side runs
+temporary directory. Both sides must be exports: a side run from the
+checkout itself read several seconds slower in ``setup_s`` than an export
+of the same code. To measure uncommitted edits, pass
+``--head "$(git stash create)"``; a stash commit holds the tracked files
+only, so ``git add`` new files first. For every seed, each side runs
 ``perfbench/run.py --workload <w> --seed <s>`` in a fresh process from
 its own tree, so the driver import, the Spark Python workers and the
 run's files all come from that tree. Pairs alternate which side runs
@@ -75,8 +78,8 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
 def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--base", required=True, help="git revision of the base")
-    p.add_argument("--head", default=None,
-                   help="git revision of the change (default: this checkout)")
+    p.add_argument("--head", required=True,
+                   help="git revision of the change")
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", default="1-10")
     p.add_argument("--seconds", type=float, default=10)
@@ -88,8 +91,7 @@ def main(argv: list[str]) -> int:
     with tempfile.TemporaryDirectory(prefix="ab-") as tmp:
         trees = {
             "base": export(a.base, os.path.join(tmp, "base")),
-            "head": export(a.head, os.path.join(tmp, "head"))
-            if a.head else REPO,
+            "head": export(a.head, os.path.join(tmp, "head")),
         }
         pairs = []
         print("| seed | first | " + " | ".join(

@@ -66,9 +66,7 @@ from pyspark.sql import functions as F
 
 
 @contextmanager
-def increment_tuning(
-    spark, enabled: bool = True, shuffle_partitions: int | None = None
-):
+def increment_tuning(spark):
     """Session tuning for the span of ONE increment-sized step (the
     ``incremental_link`` call plus the actions that consume its output).
 
@@ -81,7 +79,7 @@ def increment_tuning(
     coalesce matter there) — this is a caller-owned step-cadence knob,
     restored on exit.
 
-    ``shuffle_partitions`` (round-6): with AQE off, every one of the
+    Shuffle partitions (round-6): with AQE off, every one of the
     step's ~15 exchanges (key-count groupBys, pair-cap windows, distinct,
     label joins) materializes at the session's static
     ``spark.sql.shuffle.partitions`` — corpus-sized defaults for
@@ -89,13 +87,11 @@ def increment_tuning(
     near-empty tasks and the wall is pure scheduling. The step's one
     CPU-bound stage (Arrow scoring) is unaffected — it is explicitly
     repartitioned from the counted pair volume (``_score_increment_pairs``).
-    Default: ``max(8, defaultParallelism // 4)`` — enough partitions that
-    a skewed exchange still spreads, a quarter of the session's task
-    slots so scheduling stops dominating; interleaved A/B at sf0.1/32
-    cores: 8 partitions 8.3-11.5s vs 32 partitions 11.6-18.8s per step.
-    Callers stepping a BACKFILL-sized increment (not the daily cadence
-    this context targets) should pass their own value or skip the
-    context. Restored on exit like the AQE flag.
+    They are set to ``max(8, defaultParallelism // 4)`` — enough
+    partitions that a skewed exchange still spreads, a quarter of the
+    session's task slots so scheduling stops dominating; interleaved A/B
+    at sf0.1/32 cores: 8 partitions 8.3-11.5s vs 32 partitions
+    11.6-18.8s per step. Restored on exit like the AQE flag.
 
     Which session it governs: only ``spark``, the one passed in. On the
     streaming path ``_link_batch`` passes the outer session, but the
@@ -107,19 +103,13 @@ def increment_tuning(
     traced ``stream`` benchmark run (4-core VM) with the tuning applied
     to ``batch_df.sparkSession`` instead raised the micro-batch from
     446 to 710 tasks and its wall from 9.4 s to 12.9 s."""
-    if not enabled:
-        yield
-        return
     key = "spark.sql.adaptive.enabled"
     skey = "spark.sql.shuffle.partitions"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(
-            8, spark.sparkContext.defaultParallelism // 4
-        )
+    shuffle_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
     prev = spark.conf.get(key, "true")
     sprev = spark.conf.get(skey)
     spark.conf.set(key, "false")
-    spark.conf.set(skey, str(int(shuffle_partitions)))
+    spark.conf.set(skey, str(shuffle_partitions))
     try:
         yield
     finally:
@@ -295,18 +285,16 @@ def incremental_candidate_pairs(
         # (millions of boilerplate docs -> millions of scoped keys over
         # cap) must not be pulled into the driver unguarded (round-5
         # review) — past the limit, keep the hub/star plans DISTRIBUTED
-        # (cached lazy frames: the pre-optimization shape, a few extra
-        # AQE broadcast jobs instead of a driver OOM).
+        # (a few extra broadcast jobs instead of a driver OOM), pinned as
+        # leaves: a cached lazy frame re-renders its whole lineage in
+        # every consuming action's plan string (megabytes per action).
         # Both pulls are Arrow tables and re-enter Spark as JVM local
         # relations (``local_frame``): a row-list createDataFrame would
         # plan a Python-worker scan that every consuming action re-runs.
         hot_rows = hot_scoped.limit(_DRIVER_HOT_LIMIT + 1).toArrow()
         if hot_rows.num_rows > _DRIVER_HOT_LIMIT:
-            hot_cached = track_cache(hot_scoped)
-            star_hot = F.broadcast(hot_cached)
-            star_hubs = F.broadcast(
-                track_cache(_hot_hubs(union_keys, star_hot))
-            )
+            star_hot = F.broadcast(_pin(hot_scoped))
+            star_hubs = F.broadcast(_pin(_hot_hubs(union_keys, star_hot)))
         elif hot_rows.num_rows:
             spark = union_keys.sparkSession
             star_hot = F.broadcast(

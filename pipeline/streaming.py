@@ -15,6 +15,9 @@ code runs continuously in production with a processing-time trigger.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -289,8 +292,6 @@ def _pointer_fs(spark: SparkSession, path_str: str):
 
 
 def _pointer_read(spark: SparkSession, path_str: str):
-    import json
-
     jvm, conf, fs, hpath = _pointer_fs(spark, path_str)
     if not fs.exists(hpath):
         return None
@@ -308,8 +309,6 @@ def _pointer_commit(spark: SparkSession, path_str: str, payload: dict) -> None:
     on S3A rename is copy+delete, so production object-store deployments
     should keep state in a table format with atomic commits, e.g. the
     Iceberg seam in ``pipeline.io``)."""
-    import json
-
     jvm, conf, fs, hpath = _pointer_fs(spark, path_str)
     parent = hpath.getParent()
     if parent is not None:
@@ -340,8 +339,6 @@ def _committed_pointer(spark: SparkSession, state_dir: str):
     short-circuit read). A pointer missing one cannot be stepped or
     retracted without silently wrong labels, so it fails here — before
     any state dir is written."""
-    import os
-
     state = _pointer_read(spark, os.path.join(state_dir, "_LATEST.json"))
     if state is None:
         return None
@@ -358,64 +355,107 @@ def _committed_pointer(spark: SparkSession, state_dir: str):
     return state
 
 
-def _tombstone_ids(spark: SparkSession, state: dict):
-    """The state's retracted ids as a broadcast ``conv_id`` frame, or None
-    when nothing was retracted since the last compaction."""
-    tomb = state.get("tombstones")
-    if not tomb:
-        return None
-    return F.broadcast(spark.read.parquet(tomb).select("conv_id"))
+# The committed state layout, described once: table -> (pointer field, id
+# columns a tombstone hides rows by). A table with id columns is
+# APPEND-ONLY: its field lists one dir per commit, and deletion is logical
+# (an ids anti-join at load) until ``compact_state`` rewrites it. A table
+# without is ONE dir, replaced whole by the commit that writes it. Every
+# dir is named ``{table}_{tag}``: ``b{n}`` for micro-batch n, ``rev{n}``
+# for maintenance revision n.
+_STATE_TABLES = {
+    # increment feature rows (rep rows only in a contracted state)
+    "features": ("feature_dirs", ("conv_id",)),
+    "keys": ("key_dirs", ("conv_id",)),  # increment blocking keys
+    # MATCH edges (src, dst): the committed match graph retraction
+    # repairs labels from
+    "edges": ("edge_dirs", ("src", "dst")),
+    # (contracted only) (conv_id, rep_id, hit): which collapsed member
+    # rode which rep. The rep_id filter makes representative promotion
+    # read-consistent: a promoted class's superseded rows point at the
+    # tombstoned old rep and vanish at load, leaving only the re-pointed
+    # rows the promotion appended
+    "dups": ("dup_dirs", ("conv_id", "rep_id")),
+    "counts": ("counts", ()),  # FULL merged key member counts (narrow)
+    "clusters": ("clusters", ()),  # FULL labeling (narrow)
+    # frozen (token, df) anchor snapshot of the BASE corpus: every
+    # increment and retraction blocks against these population
+    # statistics (the incremental_link anchor_df contract); refresh by
+    # rebuilding the base, never per increment
+    "anchors": ("anchors", ()),
+    "tombstones": ("tombstones", ()),  # ids retracted since compaction
+}
 
 
-def _load_state(spark: SparkSession, state: dict):
-    """Committed pointer dict -> (features, keys, counts, clusters)
-    DataFrames, with tombstones applied.
-
-    ``tombstones`` (written by ``retract_from_state``) is an ids-only
-    parquet of retracted conversations: the corpus-sized feature/key
-    dirs are append-only, so deletion is LOGICAL — an ids anti-join at
-    load time — until ``compact_state`` physically rewrites. The
-    tombstone table is bounded by retraction volume since the last
-    compaction (deletion requests, not corpus-scale), hence the
-    broadcast."""
-    feats = spark.read.parquet(*state["feature_dirs"])
-    keys = spark.read.parquet(*state["key_dirs"])
-    tdf = _tombstone_ids(spark, state)
-    if tdf is not None:
-        feats = feats.join(tdf, "conv_id", "left_anti")
-        keys = keys.join(tdf, "conv_id", "left_anti")
-    counts = spark.read.parquet(state["counts"])
-    clusters = spark.read.parquet(state["clusters"])
-    return feats, keys, counts, clusters
+def _table_dirs(state: dict, table: str) -> list[str]:
+    """The dirs the pointer ``state`` commits for ``table``, if any."""
+    field, ids = _STATE_TABLES[table]
+    dirs = state.get(field)
+    if not dirs:
+        return []
+    return list(dirs) if ids else [dirs]
 
 
-def _load_edges(spark: SparkSession, state: dict):
-    """Committed pointer dict -> the union (src, dst) match-edge table
-    with tombstones applied to BOTH endpoints. Same append-only +
-    logical-delete contract as features/keys."""
-    edges = spark.read.parquet(*state["edge_dirs"])
-    tdf = _tombstone_ids(spark, state)
-    if tdf is not None:
-        edges = edges.join(
-            tdf.withColumnRenamed("conv_id", "src"), "src", "left_anti"
-        ).join(tdf.withColumnRenamed("conv_id", "dst"), "dst", "left_anti")
-    return edges
+def _state_loader(spark: SparkSession, state: dict):
+    """Committed pointer dict -> ``load(table)``: the table's DataFrame
+    with tombstones applied to every id column, or None when the pointer
+    has no such table. ``load("tombstones")`` is the retracted ids as a
+    broadcast ``conv_id`` frame.
+
+    The tombstone table is read ONCE per loader, i.e. once per operation.
+    It is bounded by retraction volume since the last compaction
+    (deletion requests, not corpus-scale), hence the broadcast."""
+
+    def read(table):
+        dirs = _table_dirs(state, table)
+        return spark.read.parquet(*dirs) if dirs else None
+
+    tomb = read("tombstones")
+    if tomb is not None:
+        tomb = F.broadcast(tomb.select("conv_id"))
+
+    def load(table: str):
+        if table == "tombstones":
+            return tomb
+        df = read(table)
+        if df is None or tomb is None:
+            return df
+        for col in _STATE_TABLES[table][1]:
+            df = df.join(
+                tomb.withColumnRenamed("conv_id", col), col, "left_anti"
+            )
+        return df
+
+    return load
 
 
-def _load_dups(spark: SparkSession, state: dict):
-    """Committed pointer dict -> the union ``(conv_id, rep_id, hit)``
-    collapsed-member table (contracted states), tombstone-filtered on
-    BOTH columns. The ``rep_id`` filter is what makes representative
-    promotion read-consistent: a promoted class's superseded rows point
-    at the tombstoned old rep and vanish at load, leaving only the
-    re-pointed rows the promotion appended (``retract_from_state``)."""
-    dups = spark.read.parquet(*state["dup_dirs"])
-    tdf = _tombstone_ids(spark, state)
-    if tdf is not None:
-        dups = dups.join(tdf, "conv_id", "left_anti").join(
-            tdf.withColumnRenamed("conv_id", "rep_id"), "rep_id", "left_anti"
-        )
-    return dups
+def _write(state_dir: str, table: str, tag: str, df: DataFrame) -> str:
+    """Write ``df`` as ``table``'s dir for commit ``tag``; returns it."""
+    path = os.path.join(state_dir, f"{table}_{tag}")
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _commit(
+    spark: SparkSession, state_dir: str, base: dict, tag: str,
+    tables: dict, **fields,
+) -> dict:
+    """The one state writer: writes each frame of ``tables`` to
+    ``{table}_{tag}`` (a str value is a dir this commit already wrote),
+    appends it to its table's dir list in ``base`` or replaces the dir,
+    sets ``fields``, releases the step caches and renames the pointer.
+    ``base``'s ``unmatched_removed`` (one retraction's own count) is not
+    carried. Returns the committed pointer dict."""
+    from pipeline.session import release_caches
+
+    payload = {k: v for k, v in base.items() if k != "unmatched_removed"}
+    payload.update(fields)
+    for table, df in tables.items():
+        path = df if isinstance(df, str) else _write(state_dir, table, tag, df)
+        field, ids = _STATE_TABLES[table]
+        payload[field] = payload.get(field, []) + [path] if ids else path
+    release_caches()
+    _pointer_commit(spark, os.path.join(state_dir, "_LATEST.json"), payload)
+    return payload
 
 
 def _link_batch(
@@ -438,15 +478,11 @@ def _link_batch(
       replay that re-ran would anti-join away its own convs and clobber
       its committed features/keys with empty tables).
     """
-    import os
-
     from pipeline.incremental import incremental_link
     from pipeline.linkage import build_plan, cluster_edges, match_edge_list
-    from pipeline.session import release_caches
 
     if batch_df.isEmpty():
         return
-    latest_path = os.path.join(state_dir, "_LATEST.json")
     state = _committed_pointer(spark, state_dir)
     if state is not None and int(state["batch_id"]) >= batch_id:
         # replay of an already-committed batch (crash landed between the
@@ -462,31 +498,25 @@ def _link_batch(
             f"{bool(state.get('contracted', False))}; don't flip the "
             f"mode mid-stream"
         )
-    tomb_ids = None if state is None else _tombstone_ids(spark, state)
+    load = None if state is None else _state_loader(spark, state)
+    tomb_ids = None if load is None else load("tombstones")
     if tomb_ids is not None:
         # A tombstoned conversation is DELETED, not merely hidden: an
         # at-least-once upstream replaying the very data a takedown
         # removed must not resurrect it. Without this filter the
         # re-delivery anti-join (which sees only the committed clusters,
         # from which the retraction removed the id) would admit the id
-        # as new — labeled in
-        # clusters but invisible in every _load_state read, since the
-        # tombstone anti-joins ALL dirs including post-retraction ones:
-        # a half-resurrected id that can never match again and silently
-        # splits to a singleton on the next retraction touching its
-        # entity (round-5 review). Legitimate re-admission is an
-        # explicit maintenance sequence: compact_state (clears the
-        # tombstones) first, then ingest.
+        # as new — labeled in clusters but invisible in every state load,
+        # since the tombstone anti-joins ALL dirs including
+        # post-retraction ones: a half-resurrected id that can never
+        # match again and silently splits to a singleton on the next
+        # retraction touching its entity (round-5 review). Legitimate
+        # re-admission is an explicit maintenance sequence: compact_state
+        # (clears the tombstones) first, then ingest.
         batch_df = batch_df.join(tomb_ids, "conv_id", "left_anti")
         if batch_df.isEmpty():
             return
-    fdir = os.path.join(state_dir, f"features_b{batch_id}")
-    kdir = os.path.join(state_dir, f"keys_b{batch_id}")
-    cdir = os.path.join(state_dir, f"counts_b{batch_id}")
-    ldir = os.path.join(state_dir, f"clusters_b{batch_id}")
-    adir = os.path.join(state_dir, f"anchors_b{batch_id}")
-    edir = os.path.join(state_dir, f"edges_b{batch_id}")
-    ddir = os.path.join(state_dir, f"dups_b{batch_id}")
+    tag = f"b{batch_id}"
     if state is None:
         from pipeline.blocking import key_table_with_counts, token_df
 
@@ -512,97 +542,67 @@ def _link_batch(
         # expansions.
         # Written FIRST and read back so the iterative CC below consumes
         # the parquet leaf instead of re-running the scoring subtree.
-        plan["edges"].write.mode("overwrite").parquet(edir)
+        edges = _write(state_dir, "edges", tag, plan["edges"])
         clusters, _ = cluster_edges(
-            spark.read.parquet(edir), plan["features"]
+            spark.read.parquet(edges), plan["features"]
         )
-        anchor_snapshot.write.mode("overwrite").parquet(adir)
-        anchor_snapshot = spark.read.parquet(adir)
+        anchors = _write(state_dir, "anchors", tag, anchor_snapshot)
         # the committed keys MUST be built with the same anchor stats as
         # the pairing: unweighted token_df over rep rows only would
         # commit an anchor-key table inconsistent with the clusters
         keys, counts = key_table_with_counts(
-            stored_feats, cfg, anchor_snapshot
+            stored_feats, cfg, spark.read.parquet(anchors)
         )
-        stored_feats.write.mode("overwrite").parquet(fdir)
-        keys.write.mode("overwrite").parquet(kdir)
-        counts.write.mode("overwrite").parquet(cdir)
-        clusters.write.mode("overwrite").parquet(ldir)
-        edge_dirs = [edir]
-        dup_dirs: list[str] = []
+        tables = {
+            "edges": edges, "anchors": anchors, "features": stored_feats,
+            "keys": keys, "counts": counts, "clusters": clusters,
+        }
         if plan["dup_map"] is not None:
             # (conv_id, rep_id, hit) per collapsed member — the audit
             # trail for docs that skipped the pair pipeline, and the
             # class enumeration a contracted-state takedown needs
-            plan["dup_map"].withColumn("hit", F.lit(False)).write.mode(
-                "overwrite"
-            ).parquet(ddir)
-            dup_dirs = [ddir]
-        feature_dirs, key_dirs = [fdir], [kdir]
-        anchors_dir = adir
-    else:
-        from pipeline.incremental import increment_tuning
-
-        feats, keys, counts, clusters0 = _load_state(spark, state)
-        anchors_dir = state["anchors"]
-        adf = spark.read.parquet(anchors_dir)
-        # tunes ``spark`` only; the plans built from ``batch_df`` run on
-        # the query's cloned session (see increment_tuning's docstring)
-        with increment_tuning(spark):
-            out = incremental_link(
-                feats, clusters0, batch_df, cfg, anchor_df=adf,
-                existing_keys=keys, existing_key_counts=counts,
-                contract_dups=contracted,
-            )
-            # append-only commits for the corpus-sized state; full
-            # rewrites only for the two narrow tables
-            out["new_features"].write.mode("overwrite").parquet(fdir)
-            # the increment's key rows: the exact pre-cap ``nk`` the
-            # step already built inside incremental_candidate_pairs —
-            # returned as out["new_keys"] so the commit neither
-            # re-explodes the increment nor re-joins the anchor
-            # snapshot, and never semi-joins the FULL committed key
-            # table
-            out["new_keys"].write.mode("overwrite").parquet(kdir)
-            out["key_counts"].write.mode("overwrite").parquet(cdir)
-            out["clusters"].write.mode("overwrite").parquet(ldir)
-            # this batch's match-edge contribution: scored matches plus
-            # any (rep, member) expansions — build_plan's edge semantics
-            dup_assign = out.get("dup_assign")
-            if dup_assign is not None:
-                dup_assign.write.mode("overwrite").parquet(ddir)
-            match_edge_list(out["scored"], dup_assign).write.mode(
-                "overwrite"
-            ).parquet(edir)
-        feature_dirs = state["feature_dirs"] + [fdir]
-        key_dirs = state["key_dirs"] + [kdir]
-        edge_dirs = state["edge_dirs"] + [edir]
-        dup_dirs = state["dup_dirs"] + [ddir] if contracted else []
-    release_caches()
-    payload = {
-        "batch_id": batch_id,
-        "feature_dirs": feature_dirs,
-        "key_dirs": key_dirs,
-        "edge_dirs": edge_dirs,
-        "counts": cdir,
-        "clusters": ldir,
-        "anchors": anchors_dir,
+            tables["dups"] = plan["dup_map"].withColumn("hit", F.lit(False))
         # the state's mode is part of its contract: rep-only feature/key
         # state (contracted) must never be consumed by an uncontracted
         # step, and retraction routes by it (representative promotion
         # only in contracted states)
-        "contracted": contracted,
-    }
-    if dup_dirs:
-        payload["dup_dirs"] = dup_dirs
-    if state is not None:
-        # carry maintenance metadata (retraction tombstones, revision
-        # counter) forward through increment commits
-        if state.get("tombstones"):
-            payload["tombstones"] = state["tombstones"]
-        if state.get("rev"):
-            payload["rev"] = state["rev"]
-    _pointer_commit(spark, latest_path, payload)
+        _commit(
+            spark, state_dir, {}, tag, tables,
+            batch_id=batch_id, contracted=contracted,
+        )
+        return
+    from pipeline.incremental import increment_tuning
+
+    feats, keys, counts, clusters0, adf = map(
+        load, ("features", "keys", "counts", "clusters", "anchors")
+    )
+    # tunes ``spark`` only; the plans built from ``batch_df`` run on
+    # the query's cloned session (see increment_tuning's docstring)
+    with increment_tuning(spark):
+        out = incremental_link(
+            feats, clusters0, batch_df, cfg, anchor_df=adf,
+            existing_keys=keys, existing_key_counts=counts,
+            contract_dups=contracted,
+        )
+        # append-only commits for the corpus-sized state; full rewrites
+        # only for the two narrow tables. The increment's key rows are
+        # the exact pre-cap ``nk`` the step already built inside
+        # incremental_candidate_pairs, so the commit neither re-explodes
+        # the increment nor re-joins the anchor snapshot, and never
+        # semi-joins the FULL committed key table.
+        tables = {
+            "features": out["new_features"], "keys": out["new_keys"],
+            "counts": out["key_counts"], "clusters": out["clusters"],
+        }
+        dup_assign = out.get("dup_assign")
+        if dup_assign is not None:
+            tables["dups"] = dup_assign
+        # this batch's match-edge contribution: scored matches plus any
+        # (rep, member) expansions — build_plan's edge semantics
+        tables["edges"] = match_edge_list(out["scored"], dup_assign)
+        # the base pointer carries maintenance metadata (retraction
+        # tombstones, revision counter) forward
+        _commit(spark, state_dir, state, tag, tables, batch_id=batch_id)
 
 
 def streaming_incremental_link(
@@ -622,38 +622,19 @@ def streaming_incremental_link(
     §2.10 extension).
 
     Committed state layout (all parquet; Iceberg snapshots in
-    production):
-
-      features_b{n}/   append-only per-batch increment feature rows
-      keys_b{n}/       append-only per-batch increment blocking keys
-      edges_b{n}/      append-only per-batch MATCH edges (src, dst) —
-                       the committed match graph retract_from_state
-                       repairs labels from
-      dups_b{n}/       (contracted only) per-batch (conv_id, rep_id,
-                       hit) — which collapsed members rode which rep:
-                       the audit/enumeration table for docs that
-                       skipped the pair pipeline
-      counts_b{n}/     FULL merged member counts as of batch n (narrow)
-      clusters_b{n}/   FULL labeling as of batch n (narrow)
-      anchors_b0/      frozen (token, df) anchor snapshot of the BASE
-                       corpus — every increment/retraction blocks
-                       against these population statistics (the
-                       incremental_link anchor_df contract); refresh by
-                       rebuilding the base, never per-increment
-      _LATEST.json     atomic pointer {batch_id, feature_dirs, key_dirs,
-                       edge_dirs, dup_dirs (contracted only), counts,
-                       clusters, anchors, contracted} plus, once a
-                       retraction or compaction has run, {rev,
-                       tombstones (until the next compaction),
-                       unmatched_removed (a retraction's own pointer,
-                       when its request named unknown ids)} —
-                       rename-committed through the Hadoop FS
-                       API, so it lives on the SAME filesystem as the
-                       parquet state (atomic on HDFS/local; on S3A use
-                       an atomic table format instead). A pointer
-                       without edge_dirs, anchors or (contracted)
-                       dup_dirs is rejected before any write: rebuild
-                       such a state
+    production): the tables of ``_STATE_TABLES``, which says for each one
+    its pointer field, whether commits append to it or replace it, and
+    which id columns tombstones filter. Dirs are ``{table}_b{n}`` per
+    micro-batch n and ``{table}_rev{n}`` per retraction or compaction
+    revision n. ``_LATEST.json`` is the atomic pointer: those fields,
+    ``batch_id`` and ``contracted``, plus, once a retraction or
+    compaction has run, ``rev`` and ``unmatched_removed`` (a
+    retraction's own pointer, when its request named unknown ids). It is
+    rename-committed through the Hadoop FS API by ``_commit``, so it
+    lives on the SAME filesystem as the parquet state (atomic on
+    HDFS/local; on S3A use an atomic table format instead). A pointer
+    without edge_dirs, anchors or (contracted) dup_dirs is rejected
+    before any write: rebuild such a state.
 
     Exactly-once: the streaming checkpoint prevents re-processing on
     restart, and a REPLAYED batch (crash after the pointer rename but
@@ -662,9 +643,7 @@ def streaming_incremental_link(
     overwritten. A crash BEFORE the pointer rename leaves only
     unreferenced ``*_b{n}`` dirs, which the replay overwrites wholesale.
     See ``_link_batch`` for the per-window argument; both windows are
-    crash-injected in ``tests/test_streaming.py``. The corpus-sized
-    tables are only ever APPENDED (features/keys); the per-batch
-    rewrites are the two narrow tables (counts, labels).
+    crash-injected in ``tests/test_streaming.py``.
 
     Caveat: ``state_dir`` is bound to the streaming checkpoint's batch
     numbering — reusing a populated ``state_dir`` with a FRESH
@@ -775,7 +754,7 @@ def retract_from_state(
     pointer that resurrects the retracted ids' features.
 
     Deletion is LOGICAL for the corpus-sized tables: the removed ids are
-    appended to the tombstone table and every subsequent ``_load_state``
+    appended to the tombstone table and every subsequent state load
     anti-joins them out of features/keys/edges; only the two NARROW
     tables (clusters — repaired entity-bounded, see ``retract`` — and
     key counts) are rewritten. A tombstoned id is DELETED for good:
@@ -786,7 +765,7 @@ def retract_from_state(
     the tombstones also hide every
     superseded row of a promoted class — old-rep feature/key rows,
     old-rep-endpoint edges, old-rep dup rows — at load time
-    (``_load_state`` / ``_load_edges`` / ``_load_dups``), and the
+    (``_state_loader``), and the
     promotion DELTAS (the class's rows re-issued under the new rep) are
     appended as one fresh revision-suffixed dir per table, keeping the
     corpus-sized tables append-only. Physical reclamation is
@@ -798,21 +777,19 @@ def retract_from_state(
     ``remove_ids``: DataFrame with a ``conv_id`` column, or an iterable
     of id strings. Returns the committed pointer dict.
     """
-    import os
-
     from pipeline.config import DEFAULT_CONFIG
     from pipeline.incremental import increment_tuning, retract
-    from pipeline.session import local_frame, release_caches
+    from pipeline.session import local_frame
 
     cfg = cfg or DEFAULT_CONFIG
-    latest_path = os.path.join(state_dir, "_LATEST.json")
     state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
-    contracted = bool(state.get("contracted", False))
-    feats, keys, counts, clusters = _load_state(spark, state)
-    match_edges = _load_edges(spark, state)
-    dups = _load_dups(spark, state) if contracted else None
+    load = _state_loader(spark, state)
+    # dups is None outside a contracted state
+    feats, keys, counts, clusters, match_edges, dups, tomb = map(load, (
+        "features", "keys", "counts", "clusters", "edges", "dups", "tombstones"
+    ))
     with increment_tuning(spark):
         # Resolve the request against the committed ids ONCE, in one
         # collect bounded by the request size (the committed ids it names
@@ -843,59 +820,29 @@ def retract_from_state(
         )
         # Tombstones accumulate (union with the committed table) until
         # compaction; clusters/key counts are narrow full rewrites — the
-        # same cadence the stream itself pays.
-        rev = int(state.get("rev", 0)) + 1
-        tdir = os.path.join(state_dir, f"tombstones_rev{rev}")
-        cdir = os.path.join(state_dir, f"counts_rev{rev}")
-        ldir = os.path.join(state_dir, f"clusters_rev{rev}")
-        # the resolved ids ARE retract's removal set; the local frame
-        # skips re-resolving them against the committed clusters
-        tomb = remove_ids
-        if state.get("tombstones"):
-            tomb = tomb.unionByName(
-                spark.read.parquet(state["tombstones"]).select("conv_id")
-            ).distinct()
-        tomb.write.mode("overwrite").parquet(tdir)
-        out["clusters"].write.mode("overwrite").parquet(ldir)
-        out["key_counts"].write.mode("overwrite").parquet(cdir)
-        payload = {
-            "batch_id": state["batch_id"],
-            "feature_dirs": list(state["feature_dirs"]),
-            "key_dirs": list(state["key_dirs"]),
-            # edge/dup dirs stay append-only: removed ids are tombstone-
-            # filtered at load (_load_edges / _load_dups); compact_state
-            # reclaims
-            "edge_dirs": list(state["edge_dirs"]),
-            "counts": cdir,
-            "clusters": ldir,
-            "anchors": state["anchors"],
-            "tombstones": tdir,
-            "rev": rev,
-            "contracted": contracted,
+        # same cadence the stream itself pays. The resolved ids ARE
+        # retract's removal set; the local frame skips re-resolving them
+        # against the committed clusters.
+        if tomb is not None:
+            remove_ids = remove_ids.unionByName(tomb).distinct()
+        tables = {
+            "tombstones": remove_ids, "clusters": out["clusters"],
+            "counts": out["key_counts"],
         }
-        if contracted:
-            payload["dup_dirs"] = list(state["dup_dirs"])
-        # promotion deltas (contracted mode only): each is written to
-        # ``{suffix}_rev{rev}`` and APPENDED to the payload's dir list
-        for key, suffix, dirs_key in (
-            ("promoted_features", "features_prom", "feature_dirs"),
-            ("promoted_keys", "keys_prom", "key_dirs"),
-            ("promoted_edges", "edges_prom", "edge_dirs"),
-            ("promoted_dups", "dups_prom", "dup_dirs"),
-        ):
-            if key in out:
-                pdir = os.path.join(state_dir, f"{suffix}_rev{rev}")
-                out[key].write.mode("overwrite").parquet(pdir)
-                payload[dirs_key] = payload[dirs_key] + [pdir]
+        # promotion deltas (contracted mode only) append to their tables
+        tables.update(
+            (t, out[f"promoted_{t}"]) for t in _STATE_TABLES
+            if f"promoted_{t}" in out
+        )
         # never-silent: requested ids that matched no committed doc are
         # NOT tombstoned (they would blackhole a future first ingestion)
         # — they are counted into the committed pointer so the no-op is
         # auditable
-        if unmatched:
-            payload["unmatched_removed"] = len(unmatched)
-        release_caches()
-        _pointer_commit(spark, latest_path, payload)
-    return payload
+        extra = {"unmatched_removed": len(unmatched)} if unmatched else {}
+        rev = int(state.get("rev", 0)) + 1
+        return _commit(
+            spark, state_dir, state, f"rev{rev}", tables, rev=rev, **extra
+        )
 
 
 def compact_state(spark: SparkSession, state_dir: str) -> dict:
@@ -911,46 +858,22 @@ def compact_state(spark: SparkSession, state_dir: str) -> dict:
     commit the superseded dirs are unreferenced garbage for
     ``vacuum_state``. Returns the committed pointer dict.
     """
-    import os
-
-    latest_path = os.path.join(state_dir, "_LATEST.json")
     state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
-    contracted = bool(state.get("contracted", False))
-    feats, keys, _, _ = _load_state(spark, state)
+    load = _state_loader(spark, state)
+    # Every append-only table is rewritten THROUGH the load-time
+    # tombstone filter, and the base drops the tombstones only in the
+    # same commit: folding the raw dirs instead would resurrect every
+    # retracted row (edges touching a removed endpoint, a promoted
+    # class's superseded old-rep dup rows).
+    base, tables = dict(state), {}
+    base.pop("tombstones", None)
+    for table, (field, ids) in _STATE_TABLES.items():
+        if ids and base.pop(field, None):
+            tables[table] = load(table)
     rev = int(state.get("rev", 0)) + 1
-    fdir = os.path.join(state_dir, f"features_compact_rev{rev}")
-    kdir = os.path.join(state_dir, f"keys_compact_rev{rev}")
-    edir = os.path.join(state_dir, f"edges_compact_rev{rev}")
-    feats.write.mode("overwrite").parquet(fdir)
-    keys.write.mode("overwrite").parquet(kdir)
-    # Edges MUST compact through the same tombstone filter BEFORE the
-    # tombstones are cleared: the anti-join that hides a retracted id's
-    # edges lives at load time, so folding the raw dirs and dropping the
-    # tombstone table in one commit would resurrect every edge touching
-    # a removed endpoint.
-    _load_edges(spark, state).write.mode("overwrite").parquet(edir)
-    payload = {
-        "batch_id": state["batch_id"],
-        "feature_dirs": [fdir],
-        "key_dirs": [kdir],
-        "edge_dirs": [edir],
-        "counts": state["counts"],
-        "clusters": state["clusters"],
-        "anchors": state["anchors"],
-        "rev": rev,
-        "contracted": contracted,
-    }
-    if contracted:
-        # same load-time filter as every dup reader (_load_dups): the
-        # rep_id anti-join must run BEFORE the tombstones are cleared, or
-        # a promoted class's superseded old-rep rows would resurrect
-        ddir = os.path.join(state_dir, f"dups_compact_rev{rev}")
-        _load_dups(spark, state).write.mode("overwrite").parquet(ddir)
-        payload["dup_dirs"] = [ddir]
-    _pointer_commit(spark, latest_path, payload)
-    return payload
+    return _commit(spark, state_dir, base, f"rev{rev}", tables, rev=rev)
 
 
 def vacuum_state(spark: SparkSession, state_dir: str) -> list[str]:
@@ -960,21 +883,12 @@ def vacuum_state(spark: SparkSession, state_dir: str) -> list[str]:
     stopped — an in-flight micro-batch writes its dirs BEFORE the
     pointer references them, and vacuum would eat them. Idempotent.
     Returns the deleted paths."""
-    import os
-
     state = _committed_pointer(spark, state_dir)
     if state is None:
         raise ValueError(f"no committed state at {state_dir}")
     keep = {
         os.path.basename(p)
-        for p in (
-            state["feature_dirs"]
-            + state["key_dirs"]
-            + state["edge_dirs"]
-            + state.get("dup_dirs", [])
-            + [state["counts"], state["clusters"], state["anchors"]]
-            + ([state["tombstones"]] if state.get("tombstones") else [])
-        )
+        for table in _STATE_TABLES for p in _table_dirs(state, table)
     }
     jvm, conf, fs, root = _pointer_fs(spark, state_dir)
     deleted: list[str] = []

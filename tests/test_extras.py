@@ -1,6 +1,5 @@
 """Tests for the training-data extras: dedup, similarity search, text
-stats, multimodal plumbing — on the driver-provided documents/embeddings
-tables (sf0.001) plus synthetic media."""
+stats — on the driver-provided documents/embeddings tables (sf0.001)."""
 
 from __future__ import annotations
 
@@ -223,194 +222,6 @@ def test_document_stats(documents):
     assert out["quality"].between(0, 100).all()
     assert (out["n_subwords"] >= out["n_tokens"]).all()
     assert out["fp_md5"].str.len().eq(32).all()
-
-
-def test_multimodal_plumbing(spark):
-    from pipeline.extras.multimodal import (
-        FEATURE_DIM,
-        extract_features,
-        frame_sample_plan,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=30)
-    feats = extract_features(media).toPandas()
-    assert len(feats) == 30
-    assert feats["features"].map(len).eq(FEATURE_DIM).all()
-    # deterministic across runs
-    feats2 = extract_features(media).toPandas()
-    f1 = feats.sort_values("doc_id")["features"].map(tuple).tolist()
-    f2 = feats2.sort_values("doc_id")["features"].map(tuple).tolist()
-    assert f1 == f2
-
-    frames = frame_sample_plan(media, every_ms=250).toPandas()
-    assert (frames["frame_ts_ms"] % 250 == 0).all()
-    assert len(frames) > 0
-
-
-def test_frame_sample_plan_survives_corrupt_duration(spark):
-    """ONE video row with negative/NULL meta.duration_ms must not kill
-    the job (sequence(0, -1, +step) throws at runtime — round-5 review):
-    corrupt rows floor to exactly frame 0, healthy rows are unaffected."""
-    from pipeline.extras.multimodal import MEDIA_SCHEMA, frame_sample_plan
-
-    rows = [
-        ("ok", "video", bytearray(b"x"), (1, 1, "fake", 1000)),
-        ("neg", "video", bytearray(b"x"), (1, 1, "fake", -1)),
-        ("null", "video", bytearray(b"x"), (1, 1, "fake", None)),
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    frames = frame_sample_plan(media, every_ms=500).toPandas()
-    by_doc = frames.groupby("doc_id")["frame_ts_ms"].apply(list).to_dict()
-    assert by_doc["ok"] == [0, 500, 1000]
-    assert by_doc["neg"] == [0]
-    assert by_doc["null"] == [0]
-
-
-def test_multimodal_strict_stub():
-    from pipeline.extras.multimodal import _decode_image
-
-    with pytest.raises(NotImplementedError):
-        _decode_image(b"xx", strict=True)
-
-
-def test_multimodal_decode_with_pil_handles_bad_payloads(monkeypatch):
-    """Simulated-PIL path (PIL absent in this sandbox): an undecodable
-    payload must NOT kill the mapInPandas batch — non-strict falls back
-    to the same deterministic sha256 features as the no-PIL environment,
-    strict raises ValueError (not an unhandled decoder internal)."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    class _RaisingPIL:
-        class _Img:
-            @staticmethod
-            def open(_buf):
-                raise OSError("cannot identify image file")
-
-        open = _Img.open
-
-    monkeypatch.setattr(mm, "_PILImage", _RaisingPIL)
-    fallback = mm._decode_image(b"not-an-image", strict=False)
-    assert np.array_equal(fallback, mm._fake_features(b"not-an-image"))
-    with pytest.raises(ValueError, match="undecodable image payload"):
-        mm._decode_image(b"not-an-image", strict=True)
-
-    class _DecodingPIL:
-        """Stub that 'decodes' to a constant 4x4 grayscale thumbnail."""
-
-        class _Img:
-            def convert(self, _mode):
-                return self
-
-            def resize(self, _wh):
-                return self
-
-            def __array__(self, dtype=None):
-                return np.full((4, 4), 128, dtype=dtype or np.uint8)
-
-        @staticmethod
-        def open(_buf):
-            return _DecodingPIL._Img()
-
-    monkeypatch.setattr(mm, "_PILImage", _DecodingPIL)
-    feats = mm._decode_image(b"whatever", strict=True)
-    assert feats.shape == (mm.FEATURE_DIM,)
-    assert np.allclose(feats, 128.0 / 255.0)
-
-
-def test_numpy_ppm_bmp_decode_real_pixels():
-    """Round-3 VERDICT task 5: the decode kernel runs on REAL bytes in
-    this sandbox. Planted uncompressed fixtures decode to PINNED features
-    (no PIL involved): constant-color image -> constant luma; half
-    black / half white -> known block means; BMP/PPM encode-decode
-    round-trips are pixel-exact; truncated payloads fall back (non-
-    strict) or raise (strict)."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    # constant color: every thumbnail cell == luma/255
-    px = np.full((16, 16, 3), [200, 100, 50], dtype=np.uint8)
-    luma = (0.299 * 200 + 0.587 * 100 + 0.114 * 50) / 255.0
-    feats = mm._decode_image(mm.encode_ppm(px), strict=True)
-    assert feats.shape == (mm.FEATURE_DIM,)
-    assert np.allclose(feats, luma, atol=1e-6)
-
-    # top half black, bottom half white (grayscale P5): rows 0-1 of the
-    # 4x4 thumb are 0.0, rows 2-3 are 1.0
-    gray = np.zeros((8, 8), dtype=np.uint8)
-    gray[4:] = 255
-    feats = mm._decode_image(mm.encode_ppm(gray), strict=True)
-    expect = np.repeat([0.0, 0.0, 1.0, 1.0], 4)
-    assert np.allclose(feats, expect, atol=1e-6)
-
-    # BMP round-trip is pixel-exact (incl. row padding, BGR, bottom-up)
-    rng = np.random.default_rng(8)
-    px = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    assert np.array_equal(mm._decode_bmp(mm.encode_bmp(px)), px)
-    # PPM round-trip (P6 + P5)
-    assert np.array_equal(mm._decode_ppm(mm.encode_ppm(px)), px)
-    g = rng.integers(0, 256, size=(6, 9), dtype=np.uint8)
-    assert np.array_equal(mm._decode_ppm(mm.encode_ppm(g)), g)
-    # BMP and PPM of the same pixels give the same features
-    assert np.allclose(
-        mm._decode_image(mm.encode_bmp(px), strict=True),
-        mm._decode_image(mm.encode_ppm(px), strict=True),
-    )
-
-    # header with comments + non-255 maxval
-    ppm = b"P5\n# a comment\n 2 2 # dims\n128\n" + bytes([0, 64, 96, 128])
-    dec = mm._decode_ppm(ppm)
-    assert dec.tolist() == [[0, 128], [191, 255]]
-
-    # truncated raster: non-strict falls back to the sha256 fake,
-    # strict raises the batch-safe ValueError
-    bad = mm.encode_ppm(px)[:-10]
-    assert np.array_equal(
-        mm._decode_image(bad, strict=False), mm._fake_features(bad)
-    )
-    with pytest.raises(ValueError, match="undecodable image payload"):
-        mm._decode_image(bad, strict=True)
-
-
-def test_synth_media_images_decode_for_real(spark):
-    """extract_features over synth_media exercises the REAL numpy decode
-    path end-to-end for image rows: features equal a driver-side decode
-    of the same payloads (not the sha256 fake)."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    media = mm.synth_media(spark, n=12)
-    imgs = media.where("kind = 'image'").toPandas()
-    feats = (
-        mm.extract_features(media)
-        .where("kind = 'image'")
-        .toPandas()
-        .set_index("doc_id")
-    )
-    assert len(imgs) > 0
-    seen_fmts = set()
-    for _, r in imgs.iterrows():
-        payload = bytes(r["payload"])
-        if payload[:8] == mm._PNG_SIG:
-            want = mm._luma_thumb(mm._decode_png(payload))
-            seen_fmts.add("png")
-        elif payload[:2] == b"\xff\xd8":
-            from pipeline.extras.jpeg import decode_jpeg
-
-            want = mm._luma_thumb(decode_jpeg(payload))
-            seen_fmts.add("jpeg")
-        else:
-            want = mm._luma_thumb(mm._decode_ppm(payload))
-            seen_fmts.add("ppm")
-        got = np.array(feats.loc[r["doc_id"], "features"], dtype=np.float32)
-        assert np.allclose(got, want, atol=1e-6)
-        assert not np.array_equal(got, mm._fake_features(payload))
-    # all three real decoders exercised inside the Spark batch
-    assert seen_fmts == {"png", "ppm", "jpeg"}
 
 
 def test_repeated_substring_spans_planted_boilerplate(spark):
@@ -914,167 +725,6 @@ def test_minhash_dedup_xxhash64_fast_path(spark):
     assert all(a // 10 == b // 10 for a, b in found)
 
 
-def test_png_roundtrip_all_filters_and_colortypes():
-    """encode_png -> _decode_png is pixel-exact for every scanline filter
-    (0..4) on gray, RGB and RGBA (alpha dropped on decode)."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    rng = np.random.RandomState(7)
-    gray = rng.randint(0, 256, (11, 13), dtype=np.uint8)
-    rgb = rng.randint(0, 256, (9, 8, 3), dtype=np.uint8)
-    rgba = rng.randint(0, 256, (6, 10, 4), dtype=np.uint8)
-    for ft in range(5):
-        assert np.array_equal(
-            mm._decode_png(mm.encode_png(gray, filter_type=ft)), gray
-        ), f"gray filter {ft}"
-        assert np.array_equal(
-            mm._decode_png(mm.encode_png(rgb, filter_type=ft)), rgb
-        ), f"rgb filter {ft}"
-        assert np.array_equal(
-            mm._decode_png(mm.encode_png(rgba, filter_type=ft)),
-            rgba[..., :3],
-        ), f"rgba filter {ft}"
-
-
-def test_png_decoder_against_independent_forward_filters():
-    """Spec-conformance check INDEPENDENT of encode_png: build the
-    filtered scanlines with a from-the-spec pure-Python forward filter
-    (PNG spec §9 formulas, no numpy, no shared code) and hand-assembled
-    chunks; _decode_png must recover the exact pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    px = [  # 3 rows x 4 cols RGB, hand-picked values
-        [(10, 200, 30), (11, 199, 33), (250, 2, 128), (0, 0, 255)],
-        [(9, 201, 29), (100, 100, 100), (251, 3, 127), (255, 255, 0)],
-        [(10, 10, 10), (20, 20, 20), (30, 30, 30), (40, 40, 40)],
-    ]
-    h, w, bpp = 3, 4, 3
-
-    def flat(r):
-        return [v for pxl in px[r] for v in pxl]
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    raw = b""
-    for r, ft in zip(range(h), (1, 4, 3)):  # Sub, Paeth, Average rows
-        cur = flat(r)
-        prev = flat(r - 1) if r else [0] * (w * bpp)
-        line = []
-        for x in range(w * bpp):
-            a = cur[x - bpp] if x >= bpp else 0
-            c = prev[x - bpp] if x >= bpp else 0
-            if ft == 1:
-                pred = a
-            elif ft == 3:
-                pred = (a + prev[x]) // 2
-            else:
-                pred = paeth(a, prev[x], c)
-            line.append((cur[x] - pred) % 256)
-        raw += bytes([ft]) + bytes(line)
-
-    def chunk(t, d):
-        return (
-            struct.pack(">I", len(d))
-            + t
-            + d
-            + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    png = (
-        mm._PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    want = np.array(px, dtype=np.uint8)
-    assert np.array_equal(mm._decode_png(png), want)
-
-
-def test_png_twin_of_ppm_pins_same_features():
-    """Round-4 VERDICT task 3 'done' criterion: a planted PNG fixture
-    decodes to the SAME pinned features as its PPM twin."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    rng = np.random.RandomState(21)
-    px = rng.randint(0, 256, (24, 17, 3), dtype=np.uint8)
-    f_ppm = mm._decode_image(mm.encode_ppm(px), strict=True)
-    f_png = mm._decode_image(mm.encode_png(px, filter_type=4), strict=True)
-    assert np.array_equal(f_ppm, f_png)
-    g = rng.randint(0, 256, (10, 10), dtype=np.uint8)
-    assert np.array_equal(
-        mm._decode_image(mm.encode_ppm(g), strict=True),
-        mm._decode_image(mm.encode_png(g, filter_type=2), strict=True),
-    )
-
-
-def test_png_palette_and_corrupt_payloads():
-    """Palette PNGs decode through PLTE; corrupt bytes (bad CRC,
-    truncated IDAT) take the deterministic fake path non-strict and
-    raise in strict mode — a mapInPandas batch never dies on one row."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from pipeline.extras import multimodal as mm
-
-    # 2x2 palette image: indices into a 3-color palette
-    pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])
-    raw = b"\x00" + bytes([0, 1]) + b"\x00" + bytes([2, 0])
-
-    def chunk(t, d):
-        return (
-            struct.pack(">I", len(d))
-            + t
-            + d
-            + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    png = (
-        mm._PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", pal)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    want = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 0, 0]]],
-        dtype=np.uint8,
-    )
-    assert np.array_equal(mm._decode_png(png), want)
-
-    # flip a payload byte inside IDAT -> CRC mismatch
-    bad = bytearray(png)
-    bad[len(png) - 20] ^= 0xFF
-    bad = bytes(bad)
-    assert np.array_equal(
-        mm._decode_image(bad, strict=False), mm._fake_features(bad)
-    )
-    with pytest.raises(ValueError, match="CRC|IDAT|PNG"):
-        mm._decode_image(bad, strict=True)
-    trunc = png[:-14]
-    assert np.array_equal(
-        mm._decode_image(trunc, strict=False), mm._fake_features(trunc)
-    )
-    with pytest.raises(ValueError):
-        mm._decode_image(trunc, strict=True)
-
-
 def test_minhash_rejects_degenerate_banding(spark):
     from pipeline.extras.dedup import minhash_lsh_pairs
 
@@ -1116,46 +766,6 @@ def test_dedup_pair_cap_drops_are_audited(spark):
     )
     spa = s_pair_audit.toPandas()
     assert len(spa) > 0 and (spa["pairs_kept"] < spa["pairs_total"]).all()
-
-
-def test_corrupt_jpeg_non_valueerror_falls_back():
-    """Round-5 review: truncated JPEG segments raise struct.error /
-    IndexError (not ValueError) inside decode_jpeg — the non-strict
-    fallback must catch those too, or one corrupt row kills the whole
-    mapInPandas batch."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    # SOI + SOF0 marker with a segment too short for its header fields
-    bad = b"\xff\xd8\xff\xc0\x00\x03\x08"
-    got = mm._decode_image(bad, strict=False)
-    assert np.array_equal(got, mm._fake_features(bad))
-    with pytest.raises(ValueError):
-        mm._decode_image(bad, strict=True)
-
-
-def test_extract_features_null_payload_survives(spark):
-    """A NULL payload row must take the deterministic fake path, not
-    raise TypeError from bytes(None) and fail the Arrow batch."""
-    import numpy as np
-
-    from pipeline.extras import multimodal as mm
-
-    media = spark.createDataFrame(
-        [
-            ("d0", "image", None, (0, 0, "png", None)),
-            ("d1", "image", b"P5\n2 2\n255\n\x00\x40\x80\xff", (2, 2, "pgm", None)),
-        ],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    feats = mm.extract_features(media).toPandas().sort_values("doc_id")
-    assert len(feats) == 2
-    null_row = feats[feats["doc_id"] == "d0"].iloc[0]
-    assert null_row["n_bytes"] == 0
-    assert np.allclose(null_row["features"], mm._fake_features(b""))
-    real_row = feats[feats["doc_id"] == "d1"].iloc[0]
-    assert not np.allclose(real_row["features"], mm._fake_features(b""))
 
 
 def test_lsh_bucket_key_packing_no_cross_table_collision(spark):

@@ -375,7 +375,9 @@ def test_hot_list_over_driver_limit_matches_pinned(
     """Past ``_DRIVER_HOT_LIMIT`` scoped hot keys (a backfill-sized
     increment) the hub and star plans stay distributed instead of being
     pulled to the driver; pairs and every audit must equal the
-    driver-pinned branch."""
+    driver-pinned branch, and their plans must stay as short: the hub
+    and star tables are leaves there too, not cached lineages that every
+    action re-renders (those rendered ~4x longer on this fixture)."""
     from dataclasses import replace
 
     import pipeline.incremental as incremental_mod
@@ -407,6 +409,18 @@ def test_hot_list_over_driver_limit_matches_pinned(
     names = ("pairs", "hot_key_audit", "pair_cap_audit", "cap_risk_audit")
     for name, got, want in zip(names, distributed, pinned):
         pd.testing.assert_frame_equal(_norm(got), _norm(want), obj=name)
+
+    # the session caps plan strings at 1 MB; lift it so lengths are exact
+    spark.conf.set("spark.sql.maxPlanStringLength", str(256 * 1024 * 1024))
+    try:
+        for name, got, want in zip(names, distributed, pinned):
+            got_len, want_len = (
+                len(df._jdf.queryExecution().executedPlan().toString())
+                for df in (got, want)
+            )
+            assert got_len <= 1.25 * want_len, (name, got_len, want_len)
+    finally:
+        spark.conf.set("spark.sql.maxPlanStringLength", "1048576")
 
 
 def test_incremental_key_join_broadcasts_new_side(spark, turns_df):

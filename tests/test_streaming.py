@@ -607,17 +607,20 @@ def test_streaming_incremental_link_contracted_matches_batch(spark, tmp_path):
         assert json.load(f) == latest
 
 
-def test_retract_compact_vacuum_state(spark, tmp_path):
+def test_retract_compact_vacuum_state(spark, tmp_path, monkeypatch):
     """State-maintenance lifecycle on a committed 3-batch state:
     retraction repairs labels to the batch reference over the remaining
     corpus (tombstones applied at load, features/keys untouched on
-    disk); a follow-up increment consumes the retracted state; compaction
-    folds the dir lists and physically drops tombstoned rows; vacuum
-    deletes only unreferenced dirs. Labels identical at every step."""
+    disk); a follow-up increment consumes the retracted state; a
+    compaction that crashes before its pointer rename leaves the
+    committed state as it was and its dirs to vacuum; compaction folds
+    the dir lists and physically drops tombstoned rows; vacuum deletes
+    only unreferenced dirs. Labels identical at every step."""
     import json
 
+    import pipeline.streaming as streaming_mod
     from pipeline.streaming import (
-        _load_state,
+        _state_loader,
         compact_state,
         retract_from_state,
         streaming_incremental_link,
@@ -643,6 +646,9 @@ def test_retract_compact_vacuum_state(spark, tmp_path):
     assert doomed, "fixture must provide a non-empty removal set"
     ptr = retract_from_state(spark, state, doomed, cfg=cfg)
     assert ptr["tombstones"] and ptr["rev"] == 1
+    # re-running it over the now-tombstoned state is a no-op on labels
+    ptr = retract_from_state(spark, state, doomed, cfg=cfg)
+    assert ptr["rev"] == 2
 
     remaining = t[~t["conv_id"].isin(doomed)]
     want = _batch_reference(spark, remaining, cfg)
@@ -653,7 +659,9 @@ def test_retract_compact_vacuum_state(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(got, want)
     # logical deletion: loaded state excludes the tombstoned ids
-    feats, keys, _, _ = _load_state(spark, ptr)
+    feats, keys = map(
+        _state_loader(spark, ptr), ("features", "keys")
+    )
     assert feats.where(F.col("conv_id").isin(doomed)).count() == 0
     assert keys.where(F.col("conv_id").isin(doomed)).count() == 0
 
@@ -676,6 +684,36 @@ def test_retract_compact_vacuum_state(spark, tmp_path):
         .toPandas().sort_values("conv_id").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got2, want2)
+
+    # compaction crash window: every compacted dir written, the pointer
+    # rename never runs. The committed pointer is byte-identical; the
+    # crashed run's dirs are orphans that vacuum reclaims, and the
+    # committed state still loads the same labels afterwards.
+    latest = os.path.join(state, "_LATEST.json")
+    with open(latest, "rb") as f:
+        before = f.read()
+    dirs_before = set(os.listdir(state))
+
+    def _boom(spark_, path, payload):
+        raise RuntimeError("injected crash before pointer rename")
+
+    monkeypatch.setattr(streaming_mod, "_pointer_commit", _boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_state(spark, state)
+    monkeypatch.undo()
+    with open(latest, "rb") as f:
+        assert f.read() == before
+    orphans = set(os.listdir(state)) - dirs_before
+    assert orphans, "the crashed compaction must have written its dirs"
+    assert orphans <= set(vacuum_state(spark, state))
+    got_crash = (
+        spark.read.parquet(ptr2["clusters"])
+        .select("conv_id", "entity_id")
+        .toPandas().sort_values("conv_id").reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got_crash, want2)
+    feats = _state_loader(spark, ptr2)("features")
+    assert feats.where(F.col("conv_id").isin(doomed)).count() == 0
 
     # compaction: one dir each, tombstoned rows physically gone,
     # labels untouched
@@ -799,8 +837,8 @@ def test_retract_from_contracted_state_lifecycle(spark, tmp_path):
     (b) compact + vacuum preserve labels and physically drop the
     superseded old-rep rows."""
     from pipeline.streaming import (
-        _load_dups,
         _pointer_read,
+        _state_loader,
         compact_state,
         retract_from_state,
         streaming_incremental_link,
@@ -819,7 +857,7 @@ def test_retract_from_contracted_state_lifecycle(spark, tmp_path):
     _await_done(q)
 
     latest = _pointer_read(spark, os.path.join(state, "_LATEST.json"))
-    dups0 = _load_dups(spark, latest).toPandas()
+    dups0 = _state_loader(spark, latest)("dups").toPandas()
     assert len(dups0) > 0, "seed 23 must carry collapsed twins"
     # a rep with >= 1 collapsed member (promotable) and a member of some
     # class (leaf removal); deterministic picks
@@ -846,12 +884,12 @@ def test_retract_from_contracted_state_lifecycle(spark, tmp_path):
     # the promotion is visible in committed state: old rep filtered out
     # at load, new rep carries the signature, dup rows re-pointed
     state2 = _pointer_read(spark, os.path.join(state, "_LATEST.json"))
-    from pipeline.streaming import _load_state
-
-    feats2, keys2, _, _ = _load_state(spark, state2)
+    feats2, keys2 = map(
+        _state_loader(spark, state2), ("features", "keys")
+    )
     rep_ids = {r["conv_id"] for r in feats2.select("conv_id").collect()}
     assert promote_rep not in rep_ids and expected_new_rep in rep_ids
-    dups2 = _load_dups(spark, state2).toPandas()
+    dups2 = _state_loader(spark, state2)("dups").toPandas()
     assert promote_rep not in set(dups2["rep_id"]) | set(dups2["conv_id"])
     assert expected_new_rep not in set(dups2["conv_id"])
 
@@ -900,7 +938,7 @@ def test_retract_from_contracted_state_lifecycle(spark, tmp_path):
     )
     pd.testing.assert_frame_equal(got3, _batch_reference(spark, surv_plus, cfg))
     assert promote_rep not in set(got3["conv_id"]), "tombstone permanence"
-    dups3 = _load_dups(spark, state3).toPandas()
+    dups3 = _state_loader(spark, state3)("dups").toPandas()
     hit = dups3[dups3["conv_id"] == "zz_twin"]
     assert hit.to_dict("records") == [
         {"conv_id": "zz_twin", "rep_id": expected_new_rep, "hit": True}
@@ -936,8 +974,8 @@ def test_retract_contracted_state_crash_and_idempotent_rerun(
     no-op on labels (ids already tombstoned, nothing promotes)."""
     import pipeline.streaming as streaming_mod
     from pipeline.streaming import (
-        _load_dups,
         _pointer_read,
+        _state_loader,
         retract_from_state,
         streaming_incremental_link,
     )
@@ -952,7 +990,7 @@ def test_retract_contracted_state_crash_and_idempotent_rerun(
     )
     _await_done(q)
     latest0 = _pointer_read(spark, os.path.join(state, "_LATEST.json"))
-    dups0 = _load_dups(spark, latest0).toPandas()
+    dups0 = _state_loader(spark, latest0)("dups").toPandas()
     promote_rep = sorted(dups0["rep_id"].unique())[0]
     remove = [promote_rep]
 
@@ -1116,13 +1154,13 @@ def test_tombstoned_id_never_resurrects(spark, tmp_path):
     """A retracted conversation re-delivered by an upstream replay must
     stay deleted (round-5 review: the re-delivery anti-join saw only
     tombstone-FILTERED features, so the replayed id re-entered clusters
-    while its features/keys stayed invisible to every _load_state — a
+    while its features/keys stayed invisible to every state load — a
     half-resurrection that corrupts later retractions). New convs in the
     same micro-batch still link normally."""
     import json
 
     from pipeline.streaming import (
-        _load_state,
+        _state_loader,
         retract_from_state,
         streaming_incremental_link,
     )
@@ -1157,7 +1195,9 @@ def test_tombstoned_id_never_resurrects(spark, tmp_path):
     clusters = spark.read.parquet(ptr["clusters"])
     # deleted means deleted: no label, no feature/key rows, anywhere
     assert clusters.where(F.col("conv_id") == victim).count() == 0
-    feats, keys, _, _ = _load_state(spark, ptr)
+    feats, keys = map(
+        _state_loader(spark, ptr), ("features", "keys")
+    )
     assert feats.where(F.col("conv_id") == victim).count() == 0
     assert keys.where(F.col("conv_id") == victim).count() == 0
     # the tombstone survives the increment commit
